@@ -277,9 +277,6 @@ object Main {
       // --checkpoint-dir: executor-loss-safe CC checkpoints (the large-run
       // setting); lighter than full --snapshots resumability
       checkpointDir = opts.get("checkpoint-dir"),
-      // --cc-compact true: dense long node ids through the CC iterations
-      // (the long-chain / TB-edge-set setting; see Config.ccCompactIds)
-      ccCompactIds = opts.get("cc-compact").contains("true"),
       // --window-key <sql expr> [--window N]: add a sorted-neighborhood
       // pass over the given sort key (default window 10)
       windowPasses = opts

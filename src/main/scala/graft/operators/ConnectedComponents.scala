@@ -13,16 +13,17 @@ import org.apache.spark.sql.functions._
   * transitive closure of above-threshold pairs (SURVEY.md J8).
   *
   * Scale notes:
-  *  - node ids are compacted to dense longs (DeterministicSeq ordered by
-  *    url: numeric min == lexicographic-min url) before iterating — every
-  *    star round shuffles the full edge set, and 8-byte ids cut that
-  *    volume ~5x vs url strings; cluster ids map back to component-min
-  *    urls at the end, fully data-derived (deterministic across
-  *    parallelism levels).
+  *  - graphs still iterating after `compactAfter` rounds switch to dense
+  *    long node ids (DeterministicSeq ordered by url: numeric min ==
+  *    lexicographic-min url) — every star round shuffles the full edge
+  *    set, and 8-byte ids cut that volume ~5x vs url strings; cluster ids
+  *    map back to component-min urls at the end, fully data-derived
+  *    (deterministic across parallelism levels).
   *  - every iteration ends in `localCheckpoint` to truncate lineage —
-  *    without it the plan doubles per iteration; callers that need durable
-  *    resume pass a `snapshot` hook that writes/rereads Parquet instead.
-  *  - convergence = (count, xor-of-hashes) signature equality, two scans max.
+  *    without it the plan doubles per iteration; `runResumable` passes a
+  *    `snapshot` hook that commits each iteration to Parquet instead.
+  *  - convergence = (count, hash-sum) signature equality, read off the
+  *    snapshot's own action, or the count-gated star-forest test.
   *  - giant-component skew: both stars shuffle by node; the heavy node (the
   *    component min) is exactly what AQE skew-split handles; edges are
   *    deduped each round to keep |E| <= n-1 after the first rounds.
@@ -109,18 +110,11 @@ object ConnectedComponents {
       count(lit(1)).as("n"),
       coalesce(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)).as("h")
     )
-    val ccLog = sys.env.contains("GRAFT_CC_LOG")
-    val ts0 = if (ccLog) System.nanoTime() else 0L
     val out = snapshot(observed)
-    val ts1 = if (ccLog) System.nanoTime() else 0L
     // the observation listener fires async after the snapshot's action;
     // bounded shared poll (graft.util.Observations), then fall back to the
     // explicit scan if the snapshot impl didn't drive the observation
     val m = graft.util.Observations.getWithin(obs)
-    if (ccLog)
-      println(
-        f"[cc]   snapshot ${(ts1 - ts0) / 1e9}%.3f s, obs-wait ${(System.nanoTime() - ts1) / 1e9}%.3f s"
-      )
     val sig =
       if (m.nonEmpty) (m("n").asInstanceOf[Long], BigDecimal(m("h").asInstanceOf[java.math.BigDecimal]))
       else signature(out)
@@ -139,15 +133,11 @@ object ConnectedComponents {
     * thin every iteration's 2 shuffles. It LOSES below ~10 iterations x
     * large |E| (sf0.1 chain graph: 6.6s -> 11.3s), and wins when
     * iterations x edge bytes dominate — long-chain graphs at TB edge
-    * volumes. Hence `compact` is an explicit opt-in on `run`, not a
-    * default. Callers pass the exact |E| (both call sites have it from the
-    * convergence signature); sizing policy lives in DeterministicSeq.
+    * volumes. Hence `run` calls it only mid-run, on graphs still iterating
+    * after `compactAfter` rounds. The caller passes the exact |E| from the
+    * convergence signature; sizing policy lives in DeterministicSeq.
     */
-  private def compactIds(
-      edges: DataFrame,
-      snapshot: DataFrame => DataFrame,
-      edgeCountHint: Long = 0L
-  ): DataFrame = {
+  private def compactIds(edges: DataFrame, snapshot: DataFrame => DataFrame, edgeCount: Long): DataFrame = {
     val nodes = edges
       .select(col("src").as("url"))
       .unionAll(edges.select(col("dst").as("url")))
@@ -162,7 +152,7 @@ object ConnectedComponents {
     // bytes->partitions policy.
     snapshot(
       graft.util.DeterministicSeq
-        .assign(nodes, "url", bytesHint = 2L * math.max(edgeCountHint, 0L) * 96L)
+        .assign(nodes, "url", bytesHint = 2L * edgeCount * 96L)
         .select(col("url"), col("seq").as("nid"))
     )
   }
@@ -179,115 +169,94 @@ object ConnectedComponents {
       .join(ids.select(col("nid").as("cluster_id"), col("url").as("_c")), "cluster_id")
       .select(col("_u").as("url"), col("_c").as("cluster_id"))
 
+  /** Converged-state test on a small-star output `edges` (oriented
+    * src > dst). Two conditions:
+    *  - every src appears in exactly one edge (one parent per member);
+    *  - no node appears both as a src and as a dst (depth one).
+    * Together they make `edges` a forest of depth-1 stars, each rooted at
+    * a dst smaller than all of its members. Star rounds preserve the
+    * connected components, so each star is a whole component and its root
+    * is the component min: the state the alternation converges to. Depth
+    * one alone is NOT enough — the chain a-d-e-f-b can reach
+    * {(d,a),(d,b),(e,a),(f,b)}, where d has two parents.
+    *
+    * One group-by-node aggregate checks both (one exchange); `isEmpty`
+    * stops at the first violating node.
+    */
+  private def isStarForest(edges: DataFrame): Boolean =
+    edges
+      .select(col("src").as("node"), lit(1L).as("asSrc"), lit(false).as("asDst"))
+      .unionAll(edges.select(col("dst").as("node"), lit(0L).as("asSrc"), lit(true).as("asDst")))
+      .groupBy("node")
+      .agg(sum(col("asSrc")).as("asSrc"), max(col("asDst")).as("asDst"))
+      .where(col("asSrc") > 1 || (col("asSrc") === 1 && col("asDst")))
+      .isEmpty
+
   /** Run to convergence. Input: edge list with string columns (src, dst),
     * src != dst, any orientation. Output: (url, cluster_id) covering every
     * node that appears in an edge; cluster_id = component-min url.
     *
-    * Each iteration ends in an eager SERIALIZED localCheckpoint — this
-    * truncates the LOGICAL plan (a star round references its input ~4x, so
-    * an untruncated plan grows ~16x per iteration and OOMs the analyzer)
-    * and stores bytes, not object graphs. The convergence signature then
-    * scans the checkpointed blocks (cheap second action). Iterations run
-    * over compacted long node ids (see `compactIds`).
-    */
-  /** `idSnapshot`: snapshot hook for RUN-LIFETIME frames (the compacted ids
-    * map). The ids map is re-read AFTER the last iteration
-    * (mapAssignmentsBack), so it must NEVER go through a rotating hook
-    * (Checkpoints.reliable with keepLast > 0 — what iteration snapshots
-    * use) or the final map-back reads a deleted checkpoint. The default is
-    * therefore a non-rotating serialized localCheckpoint, safe with ANY
-    * iteration snapshot; durable runs that need the ids map to survive
-    * executor loss pass their own non-rotating durable hook (e.g.
-    * Checkpoints.reliable(idsDir)).
-    */
-  /** `compactAfter`: mid-run auto-compaction threshold. Upfront compaction
-    * (`compact = true`) loses below ~10 iterations (its ~5 fixed shuffles
-    * outweigh the thinner rounds; see `compactIds`), and the iteration
-    * count is unknowable upfront — so instead of guessing, the loop
-    * switches the LIVE edge set to dense long ids the moment it has run
-    * `compactAfter` rounds without converging: shallow graphs (typical ER
-    * blocking output converges in 3-5 rounds) never pay the fixed cost,
-    * while deep chains — the only regime still iterating at that point,
-    * and exactly the regime where remaining-rounds x edge-bytes dominates —
-    * run their many remaining rounds on 8-byte ids. The star rounds
-    * preserve the node set, and nids are assigned ordered by url over that
-    * same set, so numeric min stays lexicographic-min url and the final
-    * map-back contract is identical to upfront compaction.
+    * `snapshot` materializes the initial edge set and then every iteration.
+    * The default is an eager SERIALIZED localCheckpoint — this truncates
+    * the LOGICAL plan (a star round references its input ~4x, so an
+    * untruncated plan grows ~16x per iteration and OOMs the analyzer) and
+    * stores bytes, not object graphs. Its action also yields the
+    * convergence signature (see `snapshotWithSignature`).
+    *
+    * Convergence: the signature is unchanged by a full star round, or —
+    * one round sooner — the count is unchanged and `isStarForest` holds.
+    * The count gate (a necessary fixpoint condition) keeps shrinking
+    * rounds from paying for the test.
+    *
+    * `compactAfter`: mid-run id compaction (see `compactIds`). The
+    * iteration count is unknowable upfront, so the loop switches the LIVE
+    * edge set to dense long ids once it has run `compactAfter` rounds
+    * without converging: shallow graphs (typical ER blocking output
+    * converges in 3-5 rounds) never pay the fixed cost, while deep chains
+    * — where remaining-rounds x edge-bytes dominates — run their remaining
+    * rounds on 8-byte ids. The star rounds preserve the node set, and nids
+    * are assigned ordered by url over that same set, so numeric min stays
+    * lexicographic-min url through the final map-back.
+    *
+    * `idSnapshot`: snapshot hook for the compacted ids map, which is
+    * re-read AFTER the last iteration (the map-back), so it must NEVER go
+    * through a rotating hook (Checkpoints.reliable with keepLast > 0 —
+    * what iteration snapshots use) or the map-back reads a deleted
+    * checkpoint. The default is therefore a non-rotating serialized
+    * localCheckpoint, safe with ANY iteration snapshot; durable runs that
+    * need the ids map to survive executor loss pass their own non-rotating
+    * durable hook (e.g. Checkpoints.reliable(idsDir)).
     */
   def run(
       edgesIn: DataFrame,
       maxIterations: Int = 20,
       snapshot: DataFrame => DataFrame = graft.util.Checkpoints.serializedLocal,
-      compact: Boolean = false,
       idSnapshot: Option[DataFrame => DataFrame] = None,
       compactAfter: Int = 8
   ): DataFrame = {
     val edges0 = edgesIn
       .select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-    var ids =
-      if (compact) {
-        // One exact count (a single action over the input, no checkpoint)
-        // feeds the seq pass its true size — upfront inputs, like mid-run
-        // ones, can lack honest plan stats (cached/checkpointed leaves
-        // carry the defaultSizeInBytes sentinel). Mapping to nids BEFORE
-        // the first distinct keeps that first full-edge-set shuffle in
-        // 8-byte id space (measured: unifying upfront with the mid-run
-        // block instead costs an extra url-space checkpoint, 36 -> 52 s
-        // on the 500k chain).
-        Some(
-          compactIds(
-            edges0,
-            idSnapshot.getOrElse(graft.util.Checkpoints.serializedLocal),
-            edges0.count()
-          )
-        )
-      } else None
-    var (edges, sig) =
-      snapshotWithSignature(ids.fold(edges0)(mapEdges(edges0, _)).distinct(), snapshot)
-    val ccLog = sys.env.contains("GRAFT_CC_LOG")
+    var ids: Option[DataFrame] = None
+    var (edges, sig) = snapshotWithSignature(edges0.distinct(), snapshot)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
-      if (iter == compactAfter && ids.isEmpty) {
-        val tc0 = if (ccLog) System.nanoTime() else 0L
-        ids = Some(
-          compactIds(edges, idSnapshot.getOrElse(graft.util.Checkpoints.serializedLocal), sig._1)
-        )
-        if (ccLog) println(f"[cc] compactIds ${(System.nanoTime() - tc0) / 1e9}%.2f s")
-        val tm0 = if (ccLog) System.nanoTime() else 0L
-        val (remapped, remappedSig) = snapshotWithSignature(mapEdges(edges, ids.get), snapshot)
-        if (ccLog) println(f"[cc] remap ${(System.nanoTime() - tm0) / 1e9}%.2f s")
-        edges = remapped
+      if (iter == compactAfter) {
+        val idMap = compactIds(edges, idSnapshot.getOrElse(graft.util.Checkpoints.serializedLocal), sig._1)
+        ids = Some(idMap)
         // the signature hashes id VALUES, so the url-space sig is not
         // comparable to the nid-space one; reseed convergence from the
         // remapped set (costs nothing: the next round's sig compares to it)
+        val (remapped, remappedSig) = snapshotWithSignature(mapEdges(edges, idMap), snapshot)
+        edges = remapped
         sig = remappedSig
-        if (ccLog) println(s"[cc] iter=$iter compacted: |E|=${sig._1}")
       }
-      val t0 = if (ccLog) System.nanoTime() else 0L
       val (next, nextSig) = snapshotWithSignature(smallStar(largeStar(edges)), snapshot)
-      converged = nextSig == sig
-      if (!converged && nextSig._1 == sig._1) {
-        // Early fixpoint test, saving the final verification round (the
-        // signature alone only detects convergence one FULL star round
-        // after the fixpoint): small-star output is oriented src > dst, so
-        // "no node appears as both src and dst" <=> depth-1 trees whose
-        // root is smaller than every member <=> the min-rooted star forest
-        // the alternation converges to — sufficient AND necessary. The
-        // test is one narrow semi-join with isEmpty's take-1 early exit
-        // (an unconverged graph yields a witness almost immediately),
-        // gated on count stability — a necessary fixpoint condition — so
-        // shrinking rounds never pay it.
-        converged = next
-          .join(next.select(col("src").as("dst")), Seq("dst"), "left_semi")
-          .isEmpty
-      }
+      converged = nextSig == sig || (nextSig._1 == sig._1 && isStarForest(next))
       sig = nextSig
       edges = next
       iter += 1
-      if (ccLog)
-        println(f"[cc] iter=$iter |E|=${sig._1} converged=$converged ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     // converged edge set is a star forest: (member -> root)
     val assign = starsToAssignments(edges)
@@ -300,10 +269,13 @@ object ConnectedComponents {
     members.unionByName(roots).distinct()
   }
 
-  /** Durable variant: every iteration commits through `io` as stage
-    * `cc_iter_<i>`, and a restarted run resumes from the last committed
-    * iteration (reference restart rule: only committed work survives,
-    * app/services/task_queue.py:37 -> SURVEY.md §4.3).
+  /** Durable variant: `run` with a snapshot hook that commits iteration k
+    * through `io` as stage `cc_iter_<k>` (input stage `cc_iter_<k-1>`), so
+    * a restarted run resumes from the last committed iteration (reference
+    * restart rule: only committed work survives,
+    * app/services/task_queue.py:37 -> SURVEY.md §4.3). Committed
+    * iterations are never rewritten. Ids are never compacted: a compacted
+    * resume would also need the ids map.
     */
   def runResumable(
       edgesIn: DataFrame,
@@ -322,31 +294,17 @@ object ConnectedComponents {
         .filter(i => io.manifest(s"cc_iter_$i").isDefined)
         .map(i => i -> io.readStage(spark, s"cc_iter_$i"))
         .collectFirst { case (i, Some(df)) => (i, df) }
-    var (iter, edges) = resumed match {
-      case Some((i, df)) => (i, df)
-      case None =>
-        val initial = edgesIn
-          .select(col("src"), col("dst"))
-          .where(col("src") =!= col("dst"))
-          .distinct()
-        (0, io.commitStage(initial, "cc_iter_0"))
+    val (start, from) = resumed.fold((edgesIn, 0)) { case (i, df) => (df, i) }
+    var k = from
+    val commitIteration: DataFrame => DataFrame = df => {
+      // run's first snapshot is the iteration it starts from: on a resume
+      // that one is committed already, so it is only materialized locally
+      val out =
+        if (k == from && resumed.isDefined) graft.util.Checkpoints.serializedLocal(df)
+        else io.commitStage(df, s"cc_iter_$k", if (k == 0) Nil else Seq(s"cc_iter_${k - 1}"))
+      k += 1
+      out
     }
-    var sig = signature(edges)
-    var converged = false
-    while (!converged && iter < maxIterations) {
-      iter += 1
-      val next = io.commitStage(smallStar(largeStar(edges)), s"cc_iter_$iter", Seq(s"cc_iter_${iter - 1}"))
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      if (!converged && nextSig._1 == sig._1)
-        // same count-gated min-rooted-star-forest early exit as run() —
-        // saves the full verification round on the durable path too
-        converged = next
-          .join(next.select(col("src").as("dst")), Seq("dst"), "left_semi")
-          .isEmpty
-      sig = nextSig
-      edges = next
-    }
-    starsToAssignments(edges)
+    run(start, maxIterations - from, commitIteration, compactAfter = Int.MaxValue)
   }
 }

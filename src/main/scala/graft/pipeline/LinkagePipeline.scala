@@ -39,22 +39,12 @@ object LinkagePipeline {
         * executor-loss-safe. Set (the large-run default on a real cluster):
         * every iteration persists to this dir (hdfs://, s3a://, ...) and
         * survives executor loss — the lighter sibling of the fully
-        * resumable `runResumable` snapshots.
+        * resumable `runResumable` snapshots. CC iterations rotate
+        * keep-last-2 under `cc/`; the ids map of a deep graph's mid-run
+        * compaction (ConnectedComponents.run `compactAfter`) keeps its own
+        * non-rotating root `cc-ids/`.
         */
       checkpointDir: Option[String] = None,
-      /** Compact url node ids to dense longs BEFORE the CC iterations
-        * (ConnectedComponents.run `compact`): ~5 extra shuffles up front to
-        * thin every iteration's 2 full-edge-set shuffles from ~60-byte urls
-        * to 8-byte longs. Wins when iterations x edge bytes dominate
-        * (long-chain graphs at TB edge volumes); LOSES at sandbox scale
-        * where fixed per-stage overheads dominate (measured sf0.1 chain
-        * graph: 6.6s -> 11.3s), hence an explicit opt-in (`--cc-compact`).
-        * Independently of this flag, deep graphs that are still iterating
-        * after `compactAfter` (default 8) rounds auto-compact MID-RUN —
-        * shallow graphs (the typical ER case, 3-5 rounds) never pay the
-        * fixed cost, so the auto rule is safe as a default.
-        */
-      ccCompactIds: Boolean = false,
       /** Sorted-neighborhood passes: (sort-key SQL expression over the
         * corpus's url/text columns, window size). Each pass's window pairs
         * union into the key-based candidate set (operators/
@@ -171,7 +161,6 @@ object LinkagePipeline {
       acceptedCk.select(col("urlA").as("src"), col("urlB").as("dst")),
       cfg.maxCcIterations,
       ccSnapshot,
-      compact = cfg.ccCompactIds,
       // the ids map outlives the iterations (read again by the final
       // map-back), so durable runs give it its own NON-rotating root
       idSnapshot = cfg.checkpointDir.map(d => graft.util.Checkpoints.reliable(s"$d/cc-ids"))

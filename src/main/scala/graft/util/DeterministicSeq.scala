@@ -111,15 +111,10 @@ object DeterministicSeq {
       bytesHint: Long = 0L
   ): DataFrame = {
     val nParts = plannedRangePartitions(df, rangePartitions, bytesHint)
-    val dbg = sys.env.contains("GRAFT_SEQ_LOG")
-    val t0 = if (dbg) System.nanoTime() else 0L
     val ranged = Checkpoints.serializedLocal(
       df.repartitionByRange(nParts, col(orderCol)).withColumn("_pid", spark_partition_id())
     )
-    if (dbg) println(f"[seq] nParts=$nParts ranged ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val t1 = if (dbg) System.nanoTime() else 0L
     val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("_n")).orderBy("_pid").collect()
-    if (dbg) println(f"[seq] counts ${(System.nanoTime() - t1) / 1e9}%.2f s")
     var acc = 0L
     val offsets = counts.map { r =>
       val o = (r.getInt(0), acc)

@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
+import graft.io.ParquetTableIO
 import graft.operators.ConnectedComponents
+import graft.util.Checkpoints
 
 class ConnectedComponentsSpec extends SparkSpec {
 
@@ -25,6 +30,11 @@ class ConnectedComponentsSpec extends SparkSpec {
       if (ra != rb) parent(if (ra < rb) rb else ra) = if (ra < rb) ra else rb
     }
     nodes.map(n => n -> find(n)).toMap
+  }
+
+  private def rmrf(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmrf))
+    f.delete()
   }
 
   test("simple chain collapses to min") {
@@ -53,7 +63,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  test("compact-id opt-in produces identical assignments") {
+  test("mid-run compaction on a random graph matches the uncompacted run") {
     import spark.implicits._
     val rng = new scala.util.Random(13)
     val edges = (1 to 80)
@@ -62,13 +72,20 @@ class ConnectedComponentsSpec extends SparkSpec {
       .distinct
     val df = edges.toDF("src", "dst")
     val plain = ConnectedComponents.run(df).collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val compact = ConnectedComponents
-      .run(df, compact = true)
+    var idMaps = 0
+    val countingIds: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = ids => {
+      idMaps += 1
+      graft.util.Checkpoints.serializedLocal(ids)
+    }
+    val compacted = ConnectedComponents
+      .run(df, idSnapshot = Some(countingIds), compactAfter = 1)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(plain == compact)
+    assert(idMaps == 1, "the run must have compacted after its first round")
+    assert(plain == compacted)
+    assert(plain.toMap == bruteForce(edges))
   }
 
-  test("compact + rotating durable checkpoints: idSnapshot keeps the ids map alive") {
+  test("mid-run compaction + rotating durable checkpoints: idSnapshot keeps the ids map alive") {
     import spark.implicits._
     val rng = new scala.util.Random(29)
     val edges = (1 to 80)
@@ -86,11 +103,13 @@ class ConnectedComponentsSpec extends SparkSpec {
       .run(
         df,
         snapshot = graft.util.Checkpoints.reliable(s"$dir/cc", keepLast = 2),
-        compact = true,
-        idSnapshot = Some(graft.util.Checkpoints.reliable(s"$dir/ids"))
+        idSnapshot = Some(graft.util.Checkpoints.reliable(s"$dir/ids")),
+        compactAfter = 1
       )
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(new java.io.File(s"$dir/ids/ck_0").isDirectory, "the run must have compacted mid-run")
     assert(plain == rotated)
+    rmrf(new java.io.File(dir))
   }
 
   test("mid-run auto-compaction on a deep chain matches the uncompacted run") {
@@ -110,6 +129,95 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(auto == never)
     assert(auto.forall(_._2 == "c0000"), "every chain node must link to the min url")
     assert(auto.size == 700)
+  }
+
+  // --- adversarial oracle: sparse, label-permuted components, each run
+  // ALONE. Batched with other components the count-gated early exit
+  // rarely fires while some component is still shrinking, which hides an
+  // unsound exit test; an isolated small component exposes it.
+
+  /** `n` node labels in random order: the label order (which decides the
+    * component min and every star round's min-link) is unrelated to the
+    * graph's shape.
+    */
+  private def permutedLabels(n: Int): Gen[Vector[String]] =
+    Gen.listOfN(n, Gen.long).map(keys => (0 until n).map(i => f"n$i%02d").zip(keys).sortBy(_._2).map(_._1).toVector)
+
+  /** Randomly oriented edge. */
+  private def oriented(a: String, b: String): Gen[(String, String)] = Gen.oneOf((a, b), (b, a))
+
+  private val path: Gen[Seq[(String, String)]] = for {
+    n <- Gen.choose(4, 10)
+    ls <- permutedLabels(n)
+    es <- Gen.sequence[Seq[(String, String)], (String, String)](ls.sliding(2).map(p => oriented(p(0), p(1))).toSeq)
+  } yield es
+
+  /** Random recursive tree: node i attaches to a uniform earlier node. */
+  private val tree: Gen[Seq[(String, String)]] = for {
+    n <- Gen.choose(4, 30)
+    ls <- permutedLabels(n)
+    parents <- Gen.sequence[Seq[Int], Int]((1 until n).map(i => Gen.choose(0, i - 1)))
+    es <- Gen.sequence[Seq[(String, String)], (String, String)](
+      parents.zipWithIndex.map { case (p, i) => oriented(ls(p), ls(i + 1)) }
+    )
+  } yield es
+
+  private val star: Gen[Seq[(String, String)]] = for {
+    n <- Gen.choose(5, 40)
+    ls <- permutedLabels(n)
+    es <- Gen.sequence[Seq[(String, String)], (String, String)](ls.tail.map(oriented(ls.head, _)))
+  } yield es
+
+  private def samples(gen: Gen[Seq[(String, String)]], n: Int, seed: Long): Seq[Seq[(String, String)]] =
+    (0 until n).map(i => gen.pureApply(Gen.Parameters.default, Seed(seed + i)))
+
+  /** The four CC paths: plain, mid-run compaction, mid-run compaction over
+    * rotating durable checkpoints with a non-rotating ids map, and the
+    * durable resumable run.
+    */
+  private def ccPaths(edges: DataFrame, dir: String): Seq[(String, DataFrame)] = Seq(
+    "run" -> ConnectedComponents.run(edges),
+    "compactAfter=2" -> ConnectedComponents.run(edges, compactAfter = 2),
+    "compactAfter=2+rotating" -> ConnectedComponents.run(
+      edges,
+      snapshot = Checkpoints.reliable(s"$dir/cc", keepLast = 2),
+      idSnapshot = Some(Checkpoints.reliable(s"$dir/ids")),
+      compactAfter = 2
+    ),
+    "runResumable" -> ConnectedComponents.runResumable(edges, new ParquetTableIO(s"$dir/io", "run1", "cc"))
+  )
+
+  private def assertMatchesOracle(edges: Seq[(String, String)]): Unit = {
+    import spark.implicits._
+    val expected = bruteForce(edges)
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-oracle").toFile
+    try ccPaths(edges.toDF("src", "dst"), dir.toString).foreach { case (name, out) =>
+      val rows = out.collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+      assert(rows.size == rows.map(_._1).distinct.size, s"$name: a node got several cluster_ids on $edges: $rows")
+      assert(rows.toMap == expected, s"$name: wrong clustering of $edges")
+    }
+    finally rmrf(dir)
+  }
+
+  test("a-d-e-f-b: the depth-1 exit state with a two-parent node is not converged") {
+    // this chain reaches {(d,a),(d,b),(e,a),(f,b)} with a stable count and
+    // no node both src and dst, yet d has two parents and b is not linked
+    assertMatchesOracle(Seq(("a", "d"), ("d", "e"), ("e", "f"), ("f", "b")))
+  }
+
+  /** Each component is still its own CC call; only the job-scheduling waits
+    * of different calls overlap.
+    */
+  private def eachConcurrently(components: Seq[Seq[(String, String)]]): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.traverse(components)(c => Future(assertMatchesOracle(c))), scala.concurrent.duration.Duration.Inf)
+    finally pool.shutdown()
+  }
+
+  test("label-permuted paths, trees and stars, each alone, match the oracle through every CC path") {
+    eachConcurrently(samples(path, 12, 100L) ++ samples(tree, 4, 200L) ++ samples(star, 4, 300L))
   }
 
   test("result is invariant under repartitioning") {

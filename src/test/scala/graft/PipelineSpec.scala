@@ -166,20 +166,26 @@ class PipelineSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("ccCompactIds run matches the default run exactly (incl. durable combo)") {
-    val plain = LinkagePipeline.run(pages)
+  test("deep-chain corpus compacts CC ids mid-run, plain and durable (checkpointDir) alike") {
+    import spark.implicits._
+    // identical texts under distinct canonical urls, linked only by a
+    // window-2 sorted-neighborhood pass over url: the accepted edges are
+    // one url-sorted path of 500 pages, which needs 9 star rounds — past
+    // the default compactAfter = 8, so the ids map is built mid-run
+    val chain = (0 until 500)
+      .map(i => (f"https://chain.example/p$i%04d", "the same page body under another address"))
+      .toDF("url", "text")
+    val cfg = LinkagePipeline.Config(strategies = Seq(graft.operators.CanonicalUrlBlocking), windowPasses = Seq(("url", 2)))
+    val plain = LinkagePipeline.run(chain, cfg)
       .select("url", "cluster_id", "seq").collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    val compacted = LinkagePipeline
-      .run(pages, LinkagePipeline.Config(ccCompactIds = true))
-      .select("url", "cluster_id", "seq").collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(compacted == plain)
-    // compact + durable: the ids map rides its own NON-rotating root, so
-    // the final map-back cannot read a rotated-away checkpoint
+    assert(plain.size == 500 && plain.forall(_._2 == "https://chain.example/p0000"), "one cluster rooted at the min url")
+    // compaction + durable: the ids map rides its own NON-rotating root,
+    // so the final map-back cannot read a rotated-away checkpoint
     val ckDir = java.nio.file.Files.createTempDirectory("graft-ck-compact").toString
-    val durableCompacted = LinkagePipeline
-      .run(pages, LinkagePipeline.Config(checkpointDir = Some(ckDir), ccCompactIds = true))
+    val durable = LinkagePipeline
+      .run(chain, cfg.copy(checkpointDir = Some(ckDir)))
       .select("url", "cluster_id", "seq").collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(durableCompacted == plain)
+    assert(durable == plain)
     val idCks = new java.io.File(s"$ckDir/cc-ids").list()
     assert(idCks != null && idCks.contains("ck_0"), String.valueOf(idCks))
   }

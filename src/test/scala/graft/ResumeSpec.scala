@@ -89,6 +89,21 @@ class ResumeSpec extends SparkSpec {
     val io2 = new ParquetTableIO(base, runId = "run2", configHash = cfgHash)
     val resumed = collectPreds(LinkagePipeline.runResumable(pages, LinkagePipeline.Config(), io2))
     assert(resumed == full, "mid-CC resume must reproduce the uninterrupted run exactly")
+    // the resumed run started from cc_iter_1 without rewriting it or
+    // cc_iter_0, and committed only the later iterations
+    Seq("cc_iter_0", "cc_iter_1").foreach { st =>
+      assert(io2.manifest(st).map(_.runId).contains("run1"), s"$st was rewritten on resume")
+    }
+    val laterIters = Files
+      .list(snapDir)
+      .map[String](_.getFileName.toString)
+      .filter(_.startsWith("cc_iter_"))
+      .toArray
+      .map(_.toString)
+      .filter(_.stripPrefix("cc_iter_").toInt >= 2)
+    assert(laterIters.nonEmpty, "the resumed run committed no CC iteration")
+    laterIters.foreach(st => assert(io2.manifest(st).map(_.runId).contains("run2"), st))
+    assert(io2.manifest("cc_iter_2").get.inputStages == List("cc_iter_1"))
     rmrf(java.nio.file.Paths.get(base))
   }
 
