@@ -32,7 +32,7 @@ object GoldenGen {
     val Array(sfDir, outDir) = args
     val spark = SparkSession
       .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+      .master(graft.pipeline.LinkagePipeline.defaultMaster)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

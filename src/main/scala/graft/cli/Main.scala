@@ -251,7 +251,7 @@ object Main {
     // locale would emit invalid JSON); pin the JVM default for this process
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val opts = parseArgs(args)
-    val master = opts.getOrElse("master", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+    val master = opts.getOrElse("master", LinkagePipeline.defaultMaster)
     val spark = LinkagePipeline.session(master, "graft-linkage-cli")
     try run(spark, opts)
     finally spark.stop()
@@ -286,56 +286,7 @@ object Main {
     )
 
     spark.sparkContext.setLogLevel("WARN")
-    // --monitor true: report task-time utilization (dev/bench diagnostics)
-    val taskNanos = new java.util.concurrent.atomic.AtomicLong(0)
-    val gcMillis = new java.util.concurrent.atomic.AtomicLong(0)
-    val serMillis = new java.util.concurrent.atomic.AtomicLong(0)
-    val fetchMillis = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufWriteMillis = new java.util.concurrent.atomic.AtomicLong(0)
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0)
-    val stageTimes = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val phaseTimes = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val stagePhase = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-    var monitorListener: org.apache.spark.scheduler.SparkListener = null
-    if (opts.get("monitor").contains("true")) {
-      monitorListener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            taskNanos.addAndGet(m.executorRunTime * 1000000L)
-            gcMillis.addAndGet(m.jvmGCTime)
-            serMillis.addAndGet(m.resultSerializationTime + m.executorDeserializeTime)
-            fetchMillis.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
-            shufWriteMillis.addAndGet(m.shuffleWriteMetrics.writeTime / 1000000L)
-            cpuNanos.addAndGet(m.executorCpuTime)
-          }
-        }
-        private val t0 = System.nanoTime()
-        private def rel = (System.nanoTime() - t0) / 1e9
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          // attribute every stage of the job to its LinkagePipeline phase
-          // (sc.setJobGroup -> "graft:<phase>") for the per-phase table
-          val group = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-          val phase = if (group != null && group.startsWith("graft:")) group.drop(6) else "other"
-          j.stageInfos.foreach(si => stagePhase.put(si.stageId, phase))
-          val sites = j.stageInfos.map(_.name.split(" at ").last).distinct.take(4).mkString(",")
-          System.err.println(f"[job] +$rel%7.2f START ${j.jobId}%3d stages=${j.stageInfos.size} phase=$phase sites=$sites")
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          System.err.println(f"[job] +$rel%7.2f END   ${j.jobId}%3d")
-        override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val info = sc.stageInfo
-          val key = info.name.split(" at ").lastOption.getOrElse(info.name)
-          stageTimes
-            .computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicLong(0))
-            .addAndGet(info.taskMetrics.executorRunTime)
-          phaseTimes
-            .computeIfAbsent(stagePhase.getOrDefault(info.stageId, "other"), _ => new java.util.concurrent.atomic.AtomicLong(0))
-            .addAndGet(info.taskMetrics.executorRunTime)
-        }
-      }
-      spark.sparkContext.addSparkListener(monitorListener)
-    }
+    var ledger = Option.empty[graft.util.JobLedger]
     try {
       // synth corpora are materialized to parquet first: the timed pipeline
       // reads from storage like a real run (and repeated scans of the input
@@ -352,17 +303,11 @@ object Main {
       val pages =
         if (opts.get("remove").contains("true")) raw else preparePages(raw, opts)
 
-      if (opts.get("warmup").contains("true")) {
+      if (opts.get("warmup").contains("true"))
         LinkagePipeline.run(pages.limit(20000), cfg).foreach(_ => ())
-        // the listener has been counting warmup tasks; drain the ASYNC
-        // listener bus (late task/stage events would otherwise race the
-        // reset) and zero everything so the reported task/stage numbers
-        // cover ONLY the timed run
-        org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
-        Seq(taskNanos, gcMillis, serMillis, fetchMillis, shufWriteMillis, cpuNanos).foreach(_.set(0))
-        stageTimes.clear()
-        phaseTimes.clear()
-      }
+      // --monitor true: attribute the timed region's jobs and task time to
+      // pipeline phases (dev/bench diagnostics)
+      if (opts.get("monitor").contains("true")) ledger = Some(graft.util.JobLedger.install(spark.sparkContext))
 
       val t0 = System.nanoTime()
       val strategyNames = strategies.map(_.name).mkString(",")
@@ -516,9 +461,10 @@ object Main {
       if (opts.get("save-index").contains("true") && !opts.contains("base") && !opts.get("dry-run").contains("true"))
         IncrementalLinkage.saveIndex(IncrementalLinkage.buildIndex(pages, cfg), s"$output.index", strategyNames)
       val secs = (System.nanoTime() - t0) / 1e9
-      // flush in-flight listener events before reading the counters
-      if (opts.get("monitor").contains("true"))
-        org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+      // run() leaves graft:sink set on this thread; the reporting jobs
+      // below are not part of the timed region
+      spark.sparkContext.clearJobGroup()
+      val monitored = ledger.map(_.snapshot())
 
       val out = spark.read.parquet(output)
       // --golden <path>: one canonical record per cluster via field-level
@@ -549,36 +495,29 @@ object Main {
         if (linkMode) out.select("url_a").distinct().count()
         else out.select("cluster_id").distinct().count()
       val nLinked = if (linkMode) nDocs else out.where(col("status") === "linked").count()
-      val monitorJson =
-        if (opts.get("monitor").contains("true")) {
-          val cores = spark.sparkContext.defaultParallelism
-          val taskSec = taskNanos.get / 1e9
-          s""","task_sec":${"%.1f".format(taskSec)},"gc_sec":${"%.1f".format(gcMillis.get / 1e3)}""" +
-            s""","ser_sec":${"%.1f".format(serMillis.get / 1e3)}""" +
-            s""","cpu_sec":${"%.1f".format(cpuNanos.get / 1e9)}""" +
-            s""","fetch_wait_sec":${"%.1f".format(fetchMillis.get / 1e3)}""" +
-            s""","shuf_write_sec":${"%.1f".format(shufWriteMillis.get / 1e3)}""" +
-            s""","utilization":${"%.2f".format(taskSec / (secs * cores))}"""
-        } else ""
+      val monitorJson = monitored.map(_.total).fold("") { t =>
+        val taskSec = t.runMs / 1e3
+        s""","jobs":${t.jobs},"task_sec":${"%.1f".format(taskSec)},"gc_sec":${"%.1f".format(t.gcMs / 1e3)}""" +
+          s""","ser_sec":${"%.1f".format(t.serMs / 1e3)}""" +
+          s""","cpu_sec":${"%.1f".format(t.cpuNs / 1e9)}""" +
+          s""","fetch_wait_sec":${"%.1f".format(t.fetchWaitMs / 1e3)}""" +
+          s""","shuf_write_sec":${"%.1f".format(t.shuffleWriteNs / 1e9)}""" +
+          s""","utilization":${"%.2f".format(taskSec / (secs * spark.sparkContext.defaultParallelism))}"""
+      }
       println(
         s"""{"docs":$nDocs,"clusters":$nClusters,"linked":$nLinked,""" +
           s""""seconds":${"%.2f".format(secs)},"docs_per_sec":${"%.1f".format(nDocs / secs)}""" +
           mergedClusters.map(m => s""","merged_clusters":$m""").getOrElse("") +
           monitorJson + s""","output":"$output"}"""
       )
-      if (opts.get("monitor").contains("true")) {
-        import scala.jdk.CollectionConverters._
-        phaseTimes.asScala.toSeq.sortBy(-_._2.get).foreach { case (k, v) =>
-          println(f"[phase] ${v.get / 1000.0}%8.1f s  $k")
-        }
-        stageTimes.asScala.toSeq.sortBy(-_._2.get).take(12).foreach { case (k, v) =>
-          println(f"[stage] ${v.get / 1000.0}%8.1f s  $k")
-        }
+      monitored.foreach { m =>
+        (m.phaseLines ++ m.stageLines).foreach(println)
+        m.jobLines.foreach(System.err.println)
       }
     } finally {
       // the session belongs to main/the test — leave it running, but do not
       // leak per-invocation listeners onto it
-      if (monitorListener != null) spark.sparkContext.removeSparkListener(monitorListener)
+      ledger.foreach(_.remove())
     }
   }
 }

@@ -2,8 +2,8 @@
 // private[sql]/private[spark] helpers: ExpressionUtils (Column <-> catalyst
 // Expression bridging in Spark 4.x's connect-compatible Column),
 // Observation.getOrEmpty (bounded <=100ms wait, the only non-hanging
-// getter), and the listener-bus drain (event delivery is async; metric
-// resets must not race queued events) — nothing else.
+// getter), and the listener-bus drain (event delivery is async; a
+// JobLedger snapshot must not miss queued events) — nothing else.
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression

@@ -56,6 +56,11 @@ object LinkagePipeline {
       windowPasses: Seq[(String, Int)] = Nil
   )
 
+  /** Local master sized by SPARK_GRAFT_CPUS (default 8): the CLI's and the
+    * dev tools' default.
+    */
+  def defaultMaster: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"
+
   /** Spark session tuned for the engine: AQE + skew join on, shuffle
     * partition count from the env (sized to cores locally; on a real
     * cluster AQE coalesces the rest).
@@ -118,8 +123,9 @@ object LinkagePipeline {
     // 100 TB writes the corpus to executor disks once more for no benefit.
     // Derived inputs (joins/aggregates/generators upstream) are persisted so
     // the lineage doesn't recompute per consumer.
-    // phase job-groups: every action below runs under a named group so the
-    // --monitor listener (and the Spark UI) can attribute task time to
+    // phase job-groups: every action below runs under a named group so
+    // graft.util.JobLedger (cli.Main --monitor true), the benchmark's
+    // pipeline.* metrics and the Spark UI can attribute task time to
     // pipeline phases instead of checkpoint callsites — the N-vs-4N
     // per-phase breakdown is how scaling regressions get localized
     val sc = pages.sparkSession.sparkContext
@@ -175,12 +181,13 @@ object LinkagePipeline {
     out
   }
 
-  /** Prediction-assembly tail, shared by `run`, `runResumable` and the
-    * phase profiler (graft.cli.Profile) so they can never time or ship
-    * diverging semantics: best accepted score per url, cluster join-back
-    * from the projected (url, text) corpus — never the raw input frame, so
-    * extra input columns (e.g. a cluster_id when re-linking a previous
-    * output) cannot collide with the prediction schema — status
+  /** Prediction-assembly tail, shared by `run`, `runResumable`, the
+    * battery's symbolic pipelines and the benchmark's per-layer leg so they
+    * can never time or ship diverging semantics: best accepted score per
+    * url, cluster join-back from the projected (url, text) corpus — never
+    * the raw input frame, so extra input columns (e.g. a cluster_id when
+    * re-linking a previous output) cannot collide with the prediction
+    * schema — status
     * derivation, and the deterministic seq. ONE materialization:
     * withDeterministicSeq checkpoints its range-partitioned input (needed
     * anyway for stable boundaries across its two passes), which also keeps

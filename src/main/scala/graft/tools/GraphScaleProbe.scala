@@ -16,7 +16,7 @@ import graft.synth.WebCorpus
 object GraphScaleProbe {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(25000, 75000, 250000)
-    val spark = LinkagePipeline.session("local[32]", "graph-scale-probe")
+    val spark = LinkagePipeline.session(LinkagePipeline.defaultMaster, "graph-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     sizes.foreach { n =>

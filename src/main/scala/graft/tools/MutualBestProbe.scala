@@ -11,7 +11,7 @@ import graft.pipeline.LinkagePipeline
 object MutualBestProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = LinkagePipeline.session("local[32]", "mutual-best-probe")
+    val spark = LinkagePipeline.session(LinkagePipeline.defaultMaster, "mutual-best-probe")
     spark.sparkContext.setLogLevel("ERROR")
     def timed(tag: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()

@@ -15,8 +15,7 @@ import graft.pipeline.LinkagePipeline
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, sfDir, suffix, namesCsv) = args
-    val spark =
-      LinkagePipeline.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", "plan-dump")
+    val spark = LinkagePipeline.session(LinkagePipeline.defaultMaster, "plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     namesCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>

@@ -23,7 +23,7 @@ import graft.synth.WebCorpus
   */
 object RemoveProbe {
   def main(args: Array[String]): Unit = {
-    val master = if (args.nonEmpty) args(0) else "local[32]"
+    val master = if (args.nonEmpty) args(0) else LinkagePipeline.defaultMaster
     val spark = LinkagePipeline.session(master, "remove-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val cfg = LinkagePipeline.Config()

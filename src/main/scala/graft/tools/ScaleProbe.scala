@@ -22,7 +22,7 @@ import graft.synth.WebCorpus
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(100000, 300000, 1000000)
-    val spark = LinkagePipeline.session("local[32]", "scale-probe")
+    val spark = LinkagePipeline.session(LinkagePipeline.defaultMaster, "scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val strategies: Seq[BlockingStrategy] =
       Seq(CanonicalUrlBlocking, DomainBlocking, MinHashBlocking())
