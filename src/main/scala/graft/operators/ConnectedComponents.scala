@@ -1,11 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Transitive clustering over match edges via the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected Components
-  * in MapReduce and Beyond", SoCC'14) expressed as DataFrame self-joins.
+  * in MapReduce and Beyond", SoCC'14), each star one window pass.
   *
   * The reference has no explicit clustering — its clusters are implicit in
   * the per-cell predicted KB ids (/root/reference/lion_linker/
@@ -23,10 +24,13 @@ import org.apache.spark.sql.functions._
   *    without it the plan doubles per iteration; `runResumable` passes a
   *    `snapshot` hook that commits each iteration to Parquet instead.
   *  - convergence = (count, hash-sum) signature equality, read off the
-  *    snapshot's own action, or the count-gated star-forest test.
-  *  - giant-component skew: both stars shuffle by node; the heavy node (the
-  *    component min) is exactly what AQE skew-split handles; edges are
-  *    deduped each round to keep |E| <= n-1 after the first rounds.
+  *    snapshot's own action: no extra job per round.
+  *  - a round plans three hash exchanges (one window per star, one
+  *    distinct) and no join or sort-aggregate; edges are deduped each
+  *    round to keep |E| <= n-1 after the first rounds.
+  *  - giant-component skew: a star's window puts all rows of one node in
+  *    one task, and AQE cannot split a window partition the way it splits
+  *    a skewed join partition (see `largeStar`).
   */
 object ConnectedComponents {
 
@@ -34,53 +38,44 @@ object ConnectedComponents {
     * every strictly-larger neighbor to m = min(N(u) ∪ {u}).
     */
   private[graft] def largeStar(edges: DataFrame): DataFrame = {
-    // NOT a shared explicit repartition: forcing the aggregation and the
-    // join probe onto one repartition(col("src")) exchange was measured
-    // 16% faster on a deep skewless chain (one fewer stage barrier per
-    // round; BENCH.md R5.0) — but REPARTITION_BY_COL exchanges are
-    // ineligible for AQE's skew-join split (ENSURE_REQUIREMENTS only),
-    // and the giant-component hub is EXACTLY the hot key that split
-    // exists for. A barrier saved on chains is not worth a one-task
-    // serialization point on web-scale components; the second exchange
-    // here is partial-aggregated (≈|V| rows, not |E|) and cheap.
+    // One window per star (Kiveris et al.'s one reduce per node), not a
+    // min-aggregate joined back: that plan spent a SortAggregate (min over
+    // strings), a second exchange and an AQE broadcast job per star, and
+    // per-job overhead decides the wall on small graphs (BENCH.md R7.0).
+    // Trade-off, reversing R5.0 lever (b): AQE never splits a window
+    // partition, so once one hub's rows pass spark.sql.adaptive.skewJoin.
+    // skewedPartitionThresholdInBytes (256 MB) they share one task, where
+    // the join's skew split could have spread them. A 2M-leaf hub, below
+    // that threshold, measured no slower (BENCH.md R7.1).
     val sym = edges
       .select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val mins = sym.groupBy("src").agg(least(min(col("dst")), col("src")).as("m"))
     sym
-      .join(mins, "src")
+      .select(
+        col("src"),
+        col("dst"),
+        least(min(col("dst")).over(Window.partitionBy("src")), col("src")).as("m")
+      )
       .where(col("dst") > col("src"))
       .select(col("dst").as("src"), col("m").as("dst"))
-      .where(col("src") =!= col("dst"))
-    // no terminal distinct: small-star's min-aggregations are duplicate-
-    // insensitive and its own terminal distinct dedups the round's output,
-    // so deduping here would spend a full extra shuffle per iteration to
-    // save only the duplicate share of small-star's shuffle volume
-    // (star-shaped intermediates duplicate little; measured a wash at
-    // sf0.1 chain graphs and one fewer exchange in the executed plan)
+    // no terminal distinct: small-star's min is duplicate-insensitive and
+    // its own distinct dedups the round's output
   }
 
   /** One small-star round: orient edges (big -> small); for every node u
     * link all smaller neighbors and u itself to m = min of them.
     */
-  private[graft] def smallStar(edges: DataFrame): DataFrame = {
-    val oriented = edges.select(
-      greatest(col("src"), col("dst")).as("u"),
-      least(col("src"), col("dst")).as("v")
-    )
-    // no shared repartition here either: a high-id hub is hot on the u
-    // side (it collects one row per neighbor), so the join needs its
-    // skew-split eligibility — see largeStar's note
-    val mins = oriented.groupBy("u").agg(min(col("v")).as("m"))
-    val relink = oriented
-      .join(mins, "u")
-      .select(col("v").as("src"), col("m").as("dst"))
-    val self = mins.select(col("u").as("src"), col("m").as("dst"))
-    relink
-      .unionAll(self)
+  private[graft] def smallStar(edges: DataFrame): DataFrame =
+    edges
+      .select(greatest(col("src"), col("dst")).as("u"), least(col("src"), col("dst")).as("v"))
+      .select(col("u"), col("v"), min(col("v")).over(Window.partitionBy("u")).as("m"))
+      .select(
+        explode(array(struct(col("v").as("src"), col("m").as("dst")), struct(col("u").as("src"), col("m").as("dst"))))
+          .as("e")
+      )
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-  }
 
   private def signature(edges: DataFrame): (Long, BigDecimal) = {
     // decimal(38,0) sum: overflow-proof under ANSI mode (Spark 4 default)
@@ -169,29 +164,6 @@ object ConnectedComponents {
       .join(ids.select(col("nid").as("cluster_id"), col("url").as("_c")), "cluster_id")
       .select(col("_u").as("url"), col("_c").as("cluster_id"))
 
-  /** Converged-state test on a small-star output `edges` (oriented
-    * src > dst). Two conditions:
-    *  - every src appears in exactly one edge (one parent per member);
-    *  - no node appears both as a src and as a dst (depth one).
-    * Together they make `edges` a forest of depth-1 stars, each rooted at
-    * a dst smaller than all of its members. Star rounds preserve the
-    * connected components, so each star is a whole component and its root
-    * is the component min: the state the alternation converges to. Depth
-    * one alone is NOT enough — the chain a-d-e-f-b can reach
-    * {(d,a),(d,b),(e,a),(f,b)}, where d has two parents.
-    *
-    * One group-by-node aggregate checks both (one exchange); `isEmpty`
-    * stops at the first violating node.
-    */
-  private def isStarForest(edges: DataFrame): Boolean =
-    edges
-      .select(col("src").as("node"), lit(1L).as("asSrc"), lit(false).as("asDst"))
-      .unionAll(edges.select(col("dst").as("node"), lit(0L).as("asSrc"), lit(true).as("asDst")))
-      .groupBy("node")
-      .agg(sum(col("asSrc")).as("asSrc"), max(col("asDst")).as("asDst"))
-      .where(col("asSrc") > 1 || (col("asSrc") === 1 && col("asDst")))
-      .isEmpty
-
   /** Run to convergence. Input: edge list with string columns (src, dst),
     * src != dst, any orientation. Output: (url, cluster_id) covering every
     * node that appears in an edge; cluster_id = component-min url.
@@ -203,10 +175,14 @@ object ConnectedComponents {
     * stores bytes, not object graphs. Its action also yields the
     * convergence signature (see `snapshotWithSignature`).
     *
-    * Convergence: the signature is unchanged by a full star round, or —
-    * one round sooner — the count is unchanged and `isStarForest` holds.
-    * The count gate (a necessary fixpoint condition) keeps shrinking
-    * rounds from paying for the test.
+    * Convergence: a full star round leaves the signature unchanged. A
+    * round is a function of the edge SET, so an unchanged set is the
+    * fixpoint, and the fixpoints of a round are exactly the forests of
+    * stars each rooted at its component min (Kiveris et al.). The round
+    * that confirms the fixpoint costs no extra job: its snapshot carries
+    * the signature. A run still changing after `maxIterations` rounds
+    * throws IllegalStateException with the round count and |E|: the
+    * assignment read off a non-star edge set need not be a function.
     *
     * `compactAfter`: mid-run id compaction (see `compactIds`). The
     * iteration count is unknowable upfront, so the loop switches the LIVE
@@ -253,11 +229,13 @@ object ConnectedComponents {
         sig = remappedSig
       }
       val (next, nextSig) = snapshotWithSignature(smallStar(largeStar(edges)), snapshot)
-      converged = nextSig == sig || (nextSig._1 == sig._1 && isStarForest(next))
+      converged = nextSig == sig
       sig = nextSig
       edges = next
       iter += 1
     }
+    if (!converged)
+      throw new IllegalStateException(s"connected components did not converge in $iter rounds (|E| = ${sig._1})")
     // converged edge set is a star forest: (member -> root)
     val assign = starsToAssignments(edges)
     ids.fold(assign)(mapAssignmentsBack(assign, _))
@@ -265,8 +243,9 @@ object ConnectedComponents {
 
   private def starsToAssignments(edges: DataFrame): DataFrame = {
     val members = edges.select(col("src").as("url"), col("dst").as("cluster_id"))
+    // disjoint stars: each member has one root and no root is a member
     val roots = edges.select(col("dst").as("url"), col("dst").as("cluster_id")).distinct()
-    members.unionByName(roots).distinct()
+    members.unionByName(roots)
   }
 
   /** Durable variant: `run` with a snapshot hook that commits iteration k
@@ -305,6 +284,8 @@ object ConnectedComponents {
       k += 1
       out
     }
-    run(start, maxIterations - from, commitIteration, compactAfter = Int.MaxValue)
+    // at least one round: a resume from the last allowed iteration still
+    // needs one to confirm the fixpoint, or `run` throws
+    run(start, math.max(1, maxIterations - from), commitIteration, compactAfter = Int.MaxValue)
   }
 }

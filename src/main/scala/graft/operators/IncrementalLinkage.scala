@@ -224,7 +224,7 @@ object IncrementalLinkage {
         coalesce(col("nodeB"), col("urlB")).as("dst")
       )
     // materialize the component map once: CC.run's final assignment frame
-    // is lazy (a union+distinct over the converged star forest), and every
+    // is lazy (members plus deduped roots of the converged stars), and every
     // caller consumes it at least twice — the merge-map derivation below
     // plus the caller's own relabel join
     val comp = snapshot(ConnectedComponents.run(contracted, maxIterations, snapshot))

@@ -132,9 +132,9 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   // --- adversarial oracle: sparse, label-permuted components, each run
-  // ALONE. Batched with other components the count-gated early exit
-  // rarely fires while some component is still shrinking, which hides an
-  // unsound exit test; an isolated small component exposes it.
+  // ALONE. Batched with other components, an exit test over the whole
+  // edge set rarely fires while some component is still shrinking, which
+  // hides an unsound exit; an isolated small component exposes it.
 
   /** `n` node labels in random order: the label order (which decides the
     * component min and every star round's min-link) is unrelated to the
@@ -218,6 +218,39 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("label-permuted paths, trees and stars, each alone, match the oracle through every CC path") {
     eachConcurrently(samples(path, 12, 100L) ++ samples(tree, 4, 200L) ++ samples(star, 4, 300L))
+  }
+
+  /** `leaves` leaves on each side of `hub` in label order, randomly
+    * oriented: the hub is the min neighbour of the upper leaves and
+    * collects one row per neighbour in both stars.
+    */
+  private def hubStar(prefix: String, leaves: Int, rng: scala.util.Random): Seq[(String, String)] = {
+    val hub = f"$prefix$leaves%05d"
+    (0 to 2 * leaves).filter(_ != leaves).map { i =>
+      val leaf = f"$prefix$i%05d"
+      if (rng.nextBoolean()) (hub, leaf) else (leaf, hub)
+    }
+  }
+
+  test("a hub labelled mid-range with 2k leaves on each side matches the oracle through every CC path") {
+    assertMatchesOracle(hubStar("n", 2000, new scala.util.Random(41)))
+  }
+
+  test("two mid-range hubs bridged by a label-permuted 6-node path match the oracle through every CC path") {
+    val rng = new scala.util.Random(43)
+    // bridge labels spread over (and below) the hubs' label range, so the
+    // component min sits inside the path, away from either hub
+    val bridge = rng.shuffle(Seq("m9999", "n00500b", "n03000b", "o01000b", "o03500b", "p0000"))
+    val path = ("n02000" +: bridge :+ "o02000").sliding(2).map(p => (p(0), p(1))).toSeq
+    assertMatchesOracle(hubStar("n", 2000, rng) ++ hubStar("o", 2000, rng) ++ path)
+  }
+
+  test("a run that does not converge within maxIterations throws instead of returning a partial assignment") {
+    import spark.implicits._
+    val labels = new scala.util.Random(47).shuffle((0 until 12).map(i => f"n$i%02d"))
+    val path = labels.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst")
+    val e = intercept[IllegalStateException](ConnectedComponents.run(path, maxIterations = 1))
+    assert(e.getMessage.contains("1 rounds") && e.getMessage.contains("|E| ="), e.getMessage)
   }
 
   test("result is invariant under repartitioning") {

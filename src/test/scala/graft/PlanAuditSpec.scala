@@ -160,4 +160,35 @@ class PlanAuditSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
   }
+
+  test("a CC star round executes as three hash exchanges with no join or sort-aggregate") {
+    import spark.implicits._
+    import graft.operators.ConnectedComponents
+    val ck = graft.util.Checkpoints.serializedLocal((0 until 2000).map(i => (s"v$i", s"v${i + 1}")).toDF("src", "dst"))
+    val round = ConnectedComponents.smallStar(ConnectedComponents.largeStar(ck))
+    round.collect() // finalize the adaptive plan
+    val plan = round.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
+    // one window per star plus the round's distinct
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 3, plan)
+    assert(!plan.contains("Join") && !plan.contains("SortAggregate"), plan)
+  }
+
+  test("CC job budget: a seeded 2k-node graph of label-permuted paths runs in at most 20 Spark jobs") {
+    import spark.implicits._
+    val rng = new scala.util.Random(53)
+    val labels = rng.shuffle((0 until 2000).map(i => f"n$i%04d")).toVector
+    // 250 paths of 8 nodes each; the shuffled labels decide every star's min
+    val edges = labels.grouped(8).flatMap(_.sliding(2).map(p => (p(0), p(1)))).toSeq.toDF("src", "dst")
+    val ledger = graft.util.JobLedger.install(spark.sparkContext)
+    val jobs =
+      try {
+        val out = graft.operators.ConnectedComponents.run(edges).collect()
+        assert(out.length == 2000 && out.map(_.getString(0)).distinct.length == 2000)
+        ledger.snapshot().jobs
+      } finally ledger.remove()
+    assert(jobs.size <= 20, jobs.map(j => s"${j.id} ${j.site}").mkString("\n"))
+  }
 }
