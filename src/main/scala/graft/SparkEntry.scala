@@ -1468,27 +1468,25 @@ object SparkEntry {
 
       // ---- base run (plays the already-committed production run) ----
       val baseKeys = keysOf(base)
-      val baseAcc = levAccept(graft.operators.Blocker.pairs(baseKeys, maxBlockSize = 100000))
+      // snapshot: read by CC and by the base store's best-score column
+      val baseAcc = graft.util.Checkpoints.serializedLocal(
+        levAccept(graft.operators.Blocker.pairs(baseKeys, maxBlockSize = 100000))
+      )
       val baseClusters = graft.operators.ConnectedComponents.run(
         baseAcc.select(col("urlA").as("src"), col("urlB").as("dst"))
       )
-      // snapshot: read twice (contractAndCluster + the oldOut relabel) —
-      // without it each reference replays the base CC map-back joins
-      val baseAssign = graft.util.Checkpoints.serializedLocal(
-        base
-          .select("url")
-          .join(baseClusters, Seq("url"), "left")
-          .select(
-            col("url"),
-            coalesce(col("cluster_id"), col("url")).as("cluster_id"),
-            col("cluster_id").isNotNull.as("base_linked")
-          )
+      // snapshot: read twice (contractAndCluster + the relabel) — without
+      // it each reference replays the base CC map-back joins
+      val baseStore = graft.util.Checkpoints.serializedLocal(
+        LinkagePipeline
+          .freshRows(base.select("url", "text"), baseClusters, LinkagePipeline.bestScores(baseAcc))
+          .drop("text")
       )
 
-      // ---- incremental step ----
+      // ---- incremental step: link()'s contract, relabel and fresh rows ----
       val deltaKeys = keysOf(delta)
       val oldHot = baseKeys.join(deltaKeys.select("key").distinct(), Seq("key"), "left_semi")
-      // snapshot: consumed by contractAndCluster AND the touched-url set —
+      // snapshot: consumed by contractAndCluster AND the best-score frame —
       // un-materialized, the delta pair join + lev kernel would run twice
       val accInc = graft.util.Checkpoints.serializedLocal(
         levAccept(
@@ -1496,32 +1494,11 @@ object SparkEntry {
         )
       )
       val cl = graft.operators.IncrementalLinkage
-        .contractAndCluster(accInc, baseAssign.select("url", "cluster_id"))
-      val touched = accInc
-        .select(col("urlA").as("url"))
-        .unionAll(accInc.select(col("urlB").as("url")))
-        .distinct()
-        .withColumn("touched", lit(true))
-      val oldOut = baseAssign
-        .join(
-          cl.mergeMap.withColumnRenamed("old_cluster_id", "cluster_id"),
-          Seq("cluster_id"),
-          "left"
-        )
-        .join(touched, Seq("url"), "left")
-        .select(
-          col("url"),
-          coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
-          when(col("base_linked") || col("touched").isNotNull, "linked").otherwise("nil").as("status")
-        )
-      val newOut = delta
-        .select("url")
-        .join(cl.assignments, Seq("url"), "left")
-        .select(
-          col("url"),
-          coalesce(col("cluster_id"), col("url")).as("cluster_id"),
-          when(col("cluster_id").isNotNull, "linked").otherwise("nil").as("status")
-        )
+        .contractAndCluster(accInc, baseStore.select("url", "cluster_id"))
+      val bestNew = LinkagePipeline.bestScores(accInc)
+      val cols = Seq("url", "cluster_id", "status").map(col)
+      val oldOut = IncrementalLinkage.relabel(baseStore, cl.mergeMap, bestNew).select(cols: _*)
+      val newOut = LinkagePipeline.freshRows(delta.select("url", "text"), cl.assignments, bestNew).select(cols: _*)
       LinkagePipeline
         .withDeterministicSeq(oldOut.unionByName(newOut), "url")
         .select("url", "cluster_id", "status", "seq")

@@ -234,11 +234,14 @@ object Blocker {
     val salted = saltOversized(keys, maxBlockSize)
     val a = salted.select(col("url").as("urlA"), col("key"))
     val b = salted.select(col("url").as("urlB"), col("key"))
-    a.join(b, Seq("key"))
-      .where(col("urlA") < col("urlB"))
-      .groupBy("urlA", "urlB")
-      .agg(min("key").as("key"))
+    minKeyPerPair(a.join(b, Seq("key")).where(col("urlA") < col("urlB")))
   }
+
+  /** One row per (urlA, urlB), under the pair's deterministic min key: a
+    * pair found by several keys, strategies or window passes scores once.
+    */
+  private[graft] def minKeyPerPair(pairs: DataFrame): DataFrame =
+    pairs.groupBy("urlA", "urlB").agg(min("key").as("key"))
 
   /** Skew census: the topN heaviest blocks with the EXACT cost a run
     * would pay for each — the pre-flight read an operator does before a

@@ -18,7 +18,7 @@ import graft.pipeline.LinkagePipeline
   * semantics (real scoring, transitive clustering, cluster merges).
   *
   * Correctness contract — the incremental result EQUALS a full rerun over
-  * (base ∪ delta), exactly, under two stated conditions:
+  * (base ∪ delta), exactly, under three stated conditions:
   *
   *   1. Blocking keys are per-document (true for all shipped strategies:
   *      canonical url / domain+tokens / MinHash bands depend only on the
@@ -195,8 +195,7 @@ object IncrementalLinkage {
       // canonical orientation; a new-new pair arrives once from each side
       // and the min-key group-by dedups it, same as Blocker.pairs
       .select(least(col("ua"), col("ub")).as("urlA"), greatest(col("ua"), col("ub")).as("urlB"), col("key"))
-      .groupBy("urlA", "urlB")
-      .agg(min("key").as("key"))
+      .transform(Blocker.minKeyPerPair)
   }
 
   final case class Clusters(assignments: DataFrame, mergeMap: DataFrame)
@@ -326,145 +325,55 @@ object IncrementalLinkage {
     val oldHotUrls0 = oldHot.select("url").distinct()
 
     // window-refresh pairs: union ranks per pass, delta-touching only
-    // (pseudo-keys "sn:<i>:w<N>" exactly as the full pipeline assigns, so
-    // per-key thresholds and min-key dedup behave identically)
-    val windowPairs: Option[DataFrame] =
-      if (cfg.windowPasses.isEmpty) None
-      else {
-        val unionCorpus = basePredictions.select("url", "text").unionByName(delta)
+    val windowPairs = LinkagePipeline
+      .windowPairs(basePredictions.select("url", "text").unionByName(delta), cfg)
+      .map { passes =>
         val dUrls = delta.select("url").distinct()
-        val passes = cfg.windowPasses.zipWithIndex.map { case ((sortExpr, w), i) =>
-          SortedNeighborhood
-            .pairs(unionCorpus, expr(sortExpr), w)
-            .withColumn("key", lit(s"sn:$i:w$w"))
-        }
-        Some(
-          passes
-            .reduce(_ unionByName _)
-            // dUrls is O(delta) small -> both probes stay broadcast joins
-            .join(dUrls.select(col("url").as("urlA"), lit(true).as("_na")), Seq("urlA"), "left")
-            .join(dUrls.select(col("url").as("urlB"), lit(true).as("_nb")), Seq("urlB"), "left")
-            .where(col("_na").isNotNull || col("_nb").isNotNull)
-            .select("urlA", "urlB", "key")
-        )
+        passes
+          // dUrls is O(delta) small -> both probes stay broadcast joins
+          .join(dUrls.select(col("url").as("urlA"), lit(true).as("_na")), Seq("urlA"), "left")
+          .join(dUrls.select(col("url").as("urlB"), lit(true).as("_nb")), Seq("urlB"), "left")
+          .where(col("_na").isNotNull || col("_nb").isNotNull)
+          .select("urlA", "urlB", "key")
       }
     // old urls reachable ONLY through a window pair still need features and
     // a contracted node id — fold them into the affected-old-url set
-    val oldHotUrls = windowPairs match {
-      case None => oldHotUrls0
-      case Some(wp) =>
-        val wOld = wp
-          .select(col("urlA").as("url"))
-          .unionByName(wp.select(col("urlB").as("url")))
-          .distinct()
-          .join(delta.select("url"), Seq("url"), "left_anti")
-        oldHotUrls0.unionByName(wOld).distinct()
+    val oldHotUrls = windowPairs.fold(oldHotUrls0) { wp =>
+      oldHotUrls0.unionByName(endpointUrls(wp).join(delta.select("url"), Seq("url"), "left_anti")).distinct()
     }
     val oldTexts = basePredictions.select("url", "text").join(oldHotUrls, Seq("url"), "left_semi")
-
-    // union-exact IDF: base artifact + delta stats (additive df)
-    val (deltaIdfDf, deltaN) = PairScorer.idfArtifact(delta)
-    val (feats, releaseFeats) =
-      PairScorer.featuresWithIdf(delta.unionByName(oldTexts), Seq((index.idfDf, index.idfDocs), (deltaIdfDf, deltaN)))
-
-    val keyPairs = candidatePairs(deltaKeys, oldHot, cfg.maxBlockSize)
-    val pairs = windowPairs match {
-      case None => keyPairs
-      case Some(wp) =>
-        // min-key dedup across sources, mirroring the full pipeline's
-        // candidatePairs (a pair found by a key block AND a window scores
-        // once, under its deterministic min key)
-        keyPairs.unionByName(wp).groupBy("urlA", "urlB").agg(min("key").as("key"))
-    }
-    val scored = PairScorer.score(pairs, feats, cfg.weights)
-    val accepted = PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds)
-    val edgeSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir
-        .map(d => graft.util.Checkpoints.reliable(s"$d/inc-accepted"))
-        .getOrElse(LinkagePipeline.checkpointed)
-    val acceptedCk = edgeSnapshot(accepted)
-    releaseFeats()
-    // deltaKeys stays cached: it is still consumed by the CC snapshot
-    // below (through oldHotUrls) AND by the caller's saveIndexDelta —
-    // dropping it here re-ran the full blocking-key pass (tokenize +
-    // MinHash over the delta) two more times; Result.release drops it
-
     val baseHotAssign = basePredictions
       .select("url", "cluster_id")
       .join(oldHotUrls, Seq("url"), "left_semi")
-    val ccSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir
-        .map(d => graft.util.Checkpoints.reliable(s"$d/inc-cc", keepLast = 2))
-        .getOrElse(LinkagePipeline.checkpointed)
-    val Clusters(comp, mergeMap0) = contractAndCluster(acceptedCk, baseHotAssign, cfg.maxCcIterations, ccSnapshot)
-    // the merge map is read by every downstream join AND returned; it is
-    // tiny (affected clusters only) — materialize once
-    val mergeMap = LinkagePipeline.checkpointed(mergeMap0)
 
-    val bestNew = acceptedCk
-      .select(col("urlA").as("url"), col("score"))
-      .unionAll(acceptedCk.select(col("urlB").as("url"), col("score")))
-      .groupBy("url")
-      .agg(max("score").as("new_score"))
+    // union-exact IDF: base artifact + delta stats (additive df)
+    val (deltaIdfDf, deltaN) = PairScorer.idfArtifact(delta)
+    // deltaKeys stays cached: it is still consumed by the CC snapshot
+    // (through oldHotUrls) AND by the caller's saveIndexDelta — dropping it
+    // after scoring re-ran the full blocking-key pass (tokenize + MinHash
+    // over the delta) two more times; Result.release drops it
+    val Relinked(comp, mergeMap, bestNew) = relink(
+      LinkagePipeline.withWindowPairs(candidatePairs(deltaKeys, oldHot, cfg.maxBlockSize), windowPairs),
+      delta.unionByName(oldTexts),
+      Seq((index.idfDf, index.idfDocs), (deltaIdfDf, deltaN)),
+      _ => baseHotAssign,
+      cfg,
+      "inc"
+    )
 
-    val deltaPred = delta
-      .join(comp, Seq("url"), "left")
-      .join(bestNew, Seq("url"), "left")
-      .select(
-        col("url"),
-        coalesce(col("cluster_id"), col("url")).as("cluster_id"),
-        col("new_score").as("score"),
-        when(col("cluster_id").isNotNull, "linked").otherwise("nil").as("status"),
-        col("text")
-      )
-    // base rewrite: one map-side pass (merge map broadcast by hint; the
-    // bestNew side is small and AQE-broadcast) — cluster relabel for
-    // merged clusters, score/status refresh for old urls touching a new
-    // edge. greatest() skips nulls, matching "max over all accepted edges".
-    val updatedBase = basePredictions
-      .join(
-        broadcast(mergeMap.select(col("old_cluster_id").as("cluster_id"), col("new_cluster_id"))),
-        Seq("cluster_id"),
-        "left"
-      )
-      .join(bestNew, Seq("url"), "left")
-      .select(
-        col("url"),
-        coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
-        greatest(col("score"), col("new_score")).as("score"),
-        when(col("new_score").isNotNull || col("status") === "linked", "linked")
-          .otherwise("nil")
-          .as("status"),
-        col("text")
-      )
-    val updatedAll = updatedBase.unionByName(deltaPred)
-    val predictions =
-      if (reseq) LinkagePipeline.withDeterministicSeq(updatedAll, "url")
-      else updatedAll.withColumn("seq", lit(null).cast("long"))
-
+    val deltaPred = LinkagePipeline.freshRows(delta, comp, bestNew)
+    val predictions = withSeq(
+      relabel(basePredictions.select(storeCols.map(col): _*), mergeMap, bestNew)
+        .drop("touched")
+        .unionByName(deltaPred),
+      reseq
+    )
     // upsert view: base rows are re-scanned WITHOUT the text column (the
     // projection reaches the parquet scan — at corpus scale this reads the
-    // narrow link columns only), filtered map-side against the broadcast
-    // merge map + bestNew before anything wide happens
-    val changedOld = basePredictions
-      .select("url", "cluster_id", "score", "status")
-      .join(
-        broadcast(mergeMap.select(col("old_cluster_id").as("cluster_id"), col("new_cluster_id"))),
-        Seq("cluster_id"),
-        "left"
-      )
-      .join(bestNew, Seq("url"), "left")
-      .where(col("new_cluster_id").isNotNull || col("new_score").isNotNull)
-      .select(
-        col("url"),
-        coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
-        greatest(col("score"), col("new_score")).as("score"),
-        when(col("new_score").isNotNull, "linked").otherwise(col("status")).as("status"),
-        lit(null).cast("string").as("text")
-      )
+    // narrow link columns only)
     val changed = deltaPred
-      .unionByName(changedOld)
       .withColumn("seq", lit(null).cast("long"))
+      .unionByName(touchedRows(basePredictions, mergeMap, bestNew))
 
     val nextIndex = Index(
       index.keys.unionByName(deltaKeys),
@@ -486,7 +395,8 @@ object IncrementalLinkage {
 
   /** Decremental output bundle. `predictions` is the full reduced store;
     * `changed` the upsert view (recomputed survivor rows whose
-    * (cluster_id, score, status) differ from base — text/seq null, same
+    * (cluster_id, score, status) differ from base, plus unaffected rows a
+    * window-refresh edge relabeled or rescored — text/seq null, same
     * rationale as [[Result.changed]]); `removed` the effective tombstone
     * set (urls that actually existed); `index` the reduced artifacts for
     * the next increment or removal.
@@ -549,10 +459,17 @@ object IncrementalLinkage {
     * component-min url, the rerun's labels by the [[ConnectedComponents]]
     * contract). The store rewrite is one anti-join + one keyed replace.
     *
-    * Sorted-neighborhood window passes are refused: removal CHANGES
-    * window adjacency (a removed doc's rank-neighbors become adjacent to
-    * each other — a rerun would propose pairs the base never saw), so no
-    * O(removed) path can honor them; rerun in full for window configs.
+    * Sorted-neighborhood window passes need `windowRefresh`: removal
+    * CHANGES window adjacency (a removed doc's rank-neighbors become
+    * adjacent — new pairs a rerun would score), so a plain removal refuses
+    * a window config. With `windowRefresh` the post-removal window pairs
+    * are computed DIRECTLY over the surviving corpus (two O(n log n) sorts
+    * per pass — survivor ranks + base ranks to identify newly-adjacent
+    * pairs), so under a corpus-independent scorer the result equals the
+    * full rerun with window passes EXACTLY, no append-order condition
+    * needed (stronger than [[link]]'s refresh). New-adjacent edges may
+    * merge clusters removal never touched — those contract to their base
+    * cluster ids and relabel through the returned mergeMap.
     */
   def remove(
       removedUrls: DataFrame,
@@ -562,17 +479,6 @@ object IncrementalLinkage {
       reseq: Boolean = true,
       windowRefresh: Boolean = false
   ): RemoveResult = {
-    // removal CHANGES window adjacency (a removed doc's rank-neighbors
-    // become adjacent — new pairs a rerun would score), so a plain removal
-    // cannot honor window passes. `windowRefresh` is the supported
-    // composition, and for removal it is stronger than link()'s: the
-    // post-removal SN pair set is computed DIRECTLY over the surviving
-    // corpus (two O(n log n) sorts per pass — survivor ranks + base ranks
-    // to identify newly-adjacent pairs), so under a corpus-independent
-    // scorer the result equals the full rerun with window passes EXACTLY,
-    // no append-order condition needed. New-adjacent edges may merge
-    // clusters removal never touched — those contract to their base
-    // cluster ids and relabel through the returned mergeMap.
     require(
       cfg.windowPasses.isEmpty || windowRefresh,
       "decremental linkage cannot honor sorted-neighborhood window passes " +
@@ -630,61 +536,35 @@ object IncrementalLinkage {
     val salted = Blocker.saltOversized(tagged, cfg.maxBlockSize)
     val sA = salted.where(col("is_m")).select(col("url").as("ua"), col("key"))
     val sB = salted.where(col("is_m")).select(col("url").as("ub"), col("key"))
-    val blockPairs = sA
-      .join(sB, Seq("key"))
-      .where(col("ua") < col("ub"))
-      .select(col("ua").as("urlA"), col("ub").as("urlB"), col("key"))
-      .groupBy("urlA", "urlB")
-      .agg(min("key").as("key"))
+    val blockPairs = Blocker.minKeyPerPair(
+      sA.join(sB, Seq("key"))
+        .where(col("ua") < col("ub"))
+        .select(col("ua").as("urlA"), col("ub").as("urlB"), col("key"))
+    )
 
-    // window-refresh pairs (pseudo-keys "sn:<i>:w<N>" as the full pipeline
-    // assigns): (a) ALL post-removal window pairs among affected-cluster
-    // survivors — those clusters re-cluster from scratch, so their window
-    // evidence must be rescored alongside the block pairs; (b) pairs
-    // adjacent AFTER removal but not before (both ranked survivors, the
-    // removed doc sat between them) ANYWHERE in the corpus — base never
-    // scored them. Base-adjacent pairs outside affected clusters keep
-    // their frozen base decision (accepted ones are encoded in the base
-    // cluster memberships; rejected ones stay rejected).
-    val windowPairs: Option[DataFrame] =
-      if (cfg.windowPasses.isEmpty) None
-      else {
-        val liveCorpus = basePredictions
-          .select("url", "text")
-          .join(rm, Seq("url"), "left_anti")
-        val post = cfg.windowPasses.zipWithIndex
-          .map { case ((sortExpr, w), i) =>
-            SortedNeighborhood
-              .pairs(liveCorpus, org.apache.spark.sql.functions.expr(sortExpr), w)
-              .withColumn("key", lit(s"sn:$i:w$w"))
-          }
-          .reduce(_ unionByName _)
-          .groupBy("urlA", "urlB")
-          .agg(min("key").as("key"))
-        val preAdj = cfg.windowPasses
-          .map { case (sortExpr, w) =>
-            SortedNeighborhood
-              .pairs(
-                basePredictions.select("url", "text"),
-                org.apache.spark.sql.functions.expr(sortExpr),
-                w
-              )
-              .select("urlA", "urlB")
-          }
-          .reduce(_ unionByName _)
-          .distinct()
-        val survUrls = survivors.select("url")
-        val affPost = post
-          .join(survUrls.select(col("url").as("urlA")), Seq("urlA"), "left_semi")
-          .join(survUrls.select(col("url").as("urlB")), Seq("urlB"), "left_semi")
-        val newAdj = post.join(preAdj, Seq("urlA", "urlB"), "left_anti")
-        Some(affPost.unionByName(newAdj).groupBy("urlA", "urlB").agg(min("key").as("key")))
-      }
-    val pairs = windowPairs match {
-      case None     => blockPairs
-      case Some(wp) =>
-        // min-key dedup across sources, mirroring the full pipeline
-        blockPairs.unionByName(wp).groupBy("urlA", "urlB").agg(min("key").as("key"))
+    // window-refresh pairs: (a) ALL post-removal window pairs among
+    // affected-cluster survivors — those clusters re-cluster from scratch,
+    // so their window evidence must be rescored alongside the block pairs;
+    // (b) pairs adjacent AFTER removal but not before (both ranked
+    // survivors, the removed doc sat between them) ANYWHERE in the corpus —
+    // base never scored them. Base-adjacent pairs outside affected clusters
+    // keep their frozen base decision (accepted ones are encoded in the
+    // base cluster memberships; rejected ones stay rejected).
+    val windowPairs = for {
+      postPasses <- LinkagePipeline.windowPairs(
+        basePredictions.select("url", "text").join(rm, Seq("url"), "left_anti"),
+        cfg
+      )
+      prePasses <- LinkagePipeline.windowPairs(basePredictions.select("url", "text"), cfg)
+    } yield {
+      // duplicates across passes and between (a) and (b) fall to the
+      // min-key dedup with the block pairs
+      val preAdj = prePasses.select("urlA", "urlB").distinct()
+      val survUrls = survivors.select("url")
+      val affPost = postPasses
+        .join(survUrls.select(col("url").as("urlA")), Seq("urlA"), "left_semi")
+        .join(survUrls.select(col("url").as("urlB")), Seq("urlB"), "left_semi")
+      affPost.unionByName(postPasses.join(preAdj, Seq("urlA", "urlB"), "left_anti"))
     }
 
     // exact reduced-corpus IDF: artifacts are additive, so subtracting the
@@ -700,90 +580,38 @@ object IncrementalLinkage {
     val reducedN = index.idfDocs - rmN
     // window-refresh edges can touch docs OUTSIDE affected clusters; their
     // texts join the feature corpus (bounded by the new-adjacent pair set)
-    val scoreCorpus = windowPairs match {
-      case None => survivors
-      case Some(wp) =>
-        val extraUrls = wp
-          .select(col("urlA").as("url"))
-          .unionByName(wp.select(col("urlB").as("url")))
-          .distinct()
-          .join(survivors.select("url"), Seq("url"), "left_anti")
-        survivors.unionByName(
-          basePredictions.select("url", "text").join(extraUrls, Seq("url"), "left_semi")
-        )
+    val scoreCorpus = windowPairs.fold(survivors) { wp =>
+      val extraUrls = endpointUrls(wp).join(survivors.select("url"), Seq("url"), "left_anti")
+      survivors.unionByName(basePredictions.select("url", "text").join(extraUrls, Seq("url"), "left_semi"))
     }
-    val (feats, releaseFeats) =
-      PairScorer.featuresWithIdf(scoreCorpus, Seq((reducedIdfDf, reducedN)))
-
-    val scored = PairScorer.score(pairs, feats, cfg.weights)
-    val accepted = PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds)
-    val edgeSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir
-        .map(d => graft.util.Checkpoints.reliable(s"$d/rm-accepted"))
-        .getOrElse(LinkagePipeline.checkpointed)
-    val acceptedCk = edgeSnapshot(accepted)
-    releaseFeats()
-
-    val ccSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir
-        .map(d => graft.util.Checkpoints.reliable(s"$d/rm-cc", keepLast = 2))
-        .getOrElse(LinkagePipeline.checkpointed)
     // endpoints outside affected clusters (window-refresh merges) contract
     // to their base cluster ids; affected-cluster survivors stay
     // member-level (their clusters re-form from scratch). Restricting the
     // contraction frame to edge endpoints keeps it O(affected + new edges).
-    val edgeUrls = acceptedCk
-      .select(col("urlA").as("url"))
-      .unionByName(acceptedCk.select(col("urlB").as("url")))
-      .distinct()
-    val unaffectedAssign = basePredictions
-      .select("url", "cluster_id")
-      .join(affected, Seq("cluster_id"), "left_anti")
-      .join(edgeUrls, Seq("url"), "left_semi")
-    val Clusters(comp, mergeMap0) =
-      contractAndCluster(acceptedCk, unaffectedAssign, cfg.maxCcIterations, ccSnapshot)
-    val mergeMap = LinkagePipeline.checkpointed(mergeMap0)
-    val bestNew = acceptedCk
-      .select(col("urlA").as("url"), col("score"))
-      .unionAll(acceptedCk.select(col("urlB").as("url"), col("score")))
-      .groupBy("url")
-      .agg(max("score").as("new_score"))
+    val unaffectedAssign = (accepted: DataFrame) =>
+      basePredictions
+        .select("url", "cluster_id")
+        .join(affected, Seq("cluster_id"), "left_anti")
+        .join(endpointUrls(accepted), Seq("url"), "left_semi")
+    val Relinked(comp, mergeMap, bestNew) = relink(
+      LinkagePipeline.withWindowPairs(blockPairs, windowPairs),
+      scoreCorpus,
+      Seq((reducedIdfDf, reducedN)),
+      unaffectedAssign,
+      cfg,
+      "rm"
+    )
 
-    val recomputed = survivors
-      .join(comp, Seq("url"), "left")
-      .join(bestNew, Seq("url"), "left")
-      .select(
-        col("url"),
-        coalesce(col("cluster_id"), col("url")).as("cluster_id"),
-        col("new_score").as("score"),
-        when(col("cluster_id").isNotNull, "linked").otherwise("nil").as("status"),
-        col("text")
-      )
+    val recomputed = LinkagePipeline.freshRows(survivors, comp, bestNew)
     val untouched = basePredictions
-      .select("url", "cluster_id", "score", "status", "text")
+      .select(storeCols.map(col): _*)
       .join(affected, Seq("cluster_id"), "left_anti")
-      .join(
-        broadcast(mergeMap.select(col("old_cluster_id").as("cluster_id"), col("new_cluster_id"))),
-        Seq("cluster_id"),
-        "left"
-      )
-      .join(bestNew, Seq("url"), "left")
-      .select(
-        col("url"),
-        coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
-        greatest(col("score"), col("new_score")).as("score"),
-        when(col("new_score").isNotNull || col("status") === "linked", "linked")
-          .otherwise("nil")
-          .as("status"),
-        col("text")
-      )
-    val updatedAll = untouched.unionByName(recomputed)
-    val predictions =
-      if (reseq) LinkagePipeline.withDeterministicSeq(updatedAll, "url")
-      else updatedAll.withColumn("seq", lit(null).cast("long"))
+    val predictions = withSeq(
+      relabel(untouched, mergeMap, bestNew).drop("touched").unionByName(recomputed),
+      reseq
+    )
 
-    // upsert view: recomputed survivor rows that actually changed (text
-    // null — linking never mutates text; seq null — inherently O(n))
+    // upsert view: recomputed survivor rows that actually changed
     val baseNarrow = members0
       .where(col("_rm").isNull)
       .select(
@@ -799,35 +627,11 @@ object IncrementalLinkage {
           col("status") =!= col("b_status") ||
           not(col("score") <=> col("b_score"))
       )
-      .select(
-        col("url"),
-        col("cluster_id"),
-        col("score"),
-        col("status"),
-        lit(null).cast("string").as("text"),
-        lit(null).cast("long").as("seq")
-      )
-    // unaffected rows a window-refresh merge relabeled or rescored (empty
-    // without windowRefresh): narrow scan, map-side broadcast filters
-    val changedOld = basePredictions
-      .select("url", "cluster_id", "score", "status")
-      .join(affected, Seq("cluster_id"), "left_anti")
-      .join(
-        broadcast(mergeMap.select(col("old_cluster_id").as("cluster_id"), col("new_cluster_id"))),
-        Seq("cluster_id"),
-        "left"
-      )
-      .join(bestNew, Seq("url"), "left")
-      .where(col("new_cluster_id").isNotNull || col("new_score").isNotNull)
-      .select(
-        col("url"),
-        coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
-        greatest(col("score"), col("new_score")).as("score"),
-        when(col("new_score").isNotNull, "linked").otherwise(col("status")).as("status"),
-        lit(null).cast("string").as("text"),
-        lit(null).cast("long").as("seq")
-      )
-    val changed = changedAffected.unionByName(changedOld)
+    // plus the unaffected rows a window-refresh merge relabeled or rescored
+    // (empty without windowRefresh)
+    val changed = asUpsert(changedAffected).unionByName(
+      touchedRows(basePredictions.join(affected, Seq("cluster_id"), "left_anti"), mergeMap, bestNew)
+    )
 
     val nextIndex = Index(
       index.keys.join(rm, Seq("url"), "left_anti"),
@@ -846,4 +650,99 @@ object IncrementalLinkage {
       }
     )
   }
+
+  /** The columns of a prediction store row, seq aside. */
+  private val storeCols = Seq("url", "cluster_id", "score", "status", "text")
+
+  /** What [[relink]] hands back: the component map over contracted nodes,
+    * the materialized merge map and the best new-edge score per url.
+    */
+  private final case class Relinked(comp: DataFrame, mergeMap: DataFrame, bestNew: DataFrame)
+
+  /** The relink kernel [[link]] and [[remove]] share: score `pairs` over
+    * `scoreCorpus` under the IDF `idfParts` sum, threshold, materialize
+    * the accepted edges (`<checkpointDir>/<tag>-accepted` when a durable
+    * root is configured), drop the feature cache, then cluster over
+    * contracted nodes — `contractTo(accepted)` is the base assignment the
+    * edge endpoints contract against — with CC snapshots rotating
+    * keep-last-2 under `<tag>-cc`.
+    */
+  private def relink(
+      pairs: DataFrame,
+      scoreCorpus: DataFrame,
+      idfParts: Seq[(DataFrame, Long)],
+      contractTo: DataFrame => DataFrame,
+      cfg: LinkagePipeline.Config,
+      tag: String
+  ): Relinked = {
+    def snapshot(root: String, keepLast: Int): DataFrame => DataFrame =
+      cfg.checkpointDir
+        .map(d => graft.util.Checkpoints.reliable(s"$d/$tag-$root", keepLast))
+        .getOrElse(LinkagePipeline.checkpointed)
+    val (feats, releaseFeats) = PairScorer.featuresWithIdf(scoreCorpus, idfParts)
+    val scored = PairScorer.score(pairs, feats, cfg.weights)
+    val accepted = snapshot("accepted", 0)(PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds))
+    releaseFeats()
+    val Clusters(comp, mergeMap) =
+      contractAndCluster(accepted, contractTo(accepted), cfg.maxCcIterations, snapshot("cc", 2))
+    // the merge map is read by every downstream join AND returned; it is
+    // tiny (affected clusters only) — materialize once
+    Relinked(comp, LinkagePipeline.checkpointed(mergeMap), LinkagePipeline.bestScores(accepted))
+  }
+
+  /** Base store rows relabeled through the merge map (broadcast: it is
+    * tiny) and rescored against the new edges: greatest() skips nulls,
+    * matching "max over all accepted edges". Columns of `base` beyond
+    * (url, cluster_id, score, status) pass through, so a caller's narrow
+    * projection stays narrow down to the scan. `touched` marks the rows
+    * the relabel or the rescore changed.
+    */
+  private[graft] def relabel(base: DataFrame, mergeMap: DataFrame, bestNew: DataFrame): DataFrame = {
+    val rest = base.columns.filterNot(Set("url", "cluster_id", "score", "status")).map(col).toSeq
+    base
+      .join(
+        broadcast(mergeMap.select(col("old_cluster_id").as("cluster_id"), col("new_cluster_id"))),
+        Seq("cluster_id"),
+        "left"
+      )
+      .join(bestNew, Seq("url"), "left")
+      .select(
+        Seq(
+          col("url"),
+          coalesce(col("new_cluster_id"), col("cluster_id")).as("cluster_id"),
+          greatest(col("score"), col("new_score")).as("score"),
+          when(col("new_score").isNotNull || col("status") === "linked", "linked").otherwise("nil").as("status"),
+          (col("new_cluster_id").isNotNull || col("new_score").isNotNull).as("touched")
+        ) ++ rest: _*
+      )
+  }
+
+  /** The upsert rows of a base-row relabel: the touched rows of `base`,
+    * scanned without text.
+    */
+  private def touchedRows(base: DataFrame, mergeMap: DataFrame, bestNew: DataFrame): DataFrame =
+    asUpsert(relabel(base.select("url", "cluster_id", "score", "status"), mergeMap, bestNew).where(col("touched")))
+
+  /** `rows` as upsert rows: text null (linking never mutates text, so an
+    * upsert need not re-ship the corpus's heaviest column) and seq null (a
+    * global dense seq is O(n)).
+    */
+  private def asUpsert(rows: DataFrame): DataFrame =
+    rows.select(
+      col("url"),
+      col("cluster_id"),
+      col("score"),
+      col("status"),
+      lit(null).cast("string").as("text"),
+      lit(null).cast("long").as("seq")
+    )
+
+  /** The distinct urls at either end of a pair frame. */
+  private def endpointUrls(pairs: DataFrame): DataFrame =
+    pairs.select(col("urlA").as("url")).unionByName(pairs.select(col("urlB").as("url"))).distinct()
+
+  /** `rows` with the deterministic seq (`reseq`), else a null seq. */
+  private def withSeq(rows: DataFrame, reseq: Boolean): DataFrame =
+    if (reseq) LinkagePipeline.withDeterministicSeq(rows, "url")
+    else rows.withColumn("seq", lit(null).cast("long"))
 }

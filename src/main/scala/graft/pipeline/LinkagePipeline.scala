@@ -195,24 +195,35 @@ object LinkagePipeline {
     * separate checkpoint of the joined frame (that would serialize the
     * full text column twice).
     */
-  def assemblePredictions(corpus: DataFrame, clusters: DataFrame, accepted: DataFrame): DataFrame = {
-    val bestScore = accepted
+  def assemblePredictions(corpus: DataFrame, clusters: DataFrame, accepted: DataFrame): DataFrame =
+    withDeterministicSeq(freshRows(corpus, clusters, bestScores(accepted)), "url")
+
+  /** Best accepted score per url over an edge frame (urlA, urlB, score):
+    * (url, new_score).
+    */
+  private[graft] def bestScores(accepted: DataFrame): DataFrame =
+    accepted
       .select(col("urlA").as("url"), col("score"))
       .unionAll(accepted.select(col("urlB").as("url"), col("score")))
       .groupBy("url")
-      .agg(max("score").as("score"))
-    val joined = corpus
+      .agg(max("score").as("new_score"))
+
+  /** Prediction rows (url, cluster_id, score, status, text) for a (url,
+    * text) corpus whose clustering was computed from scratch: a url in no
+    * component of `clusters` is its own nil singleton; `score` is its row
+    * of [[bestScores]], null when no accepted edge touches it.
+    */
+  private[graft] def freshRows(corpus: DataFrame, clusters: DataFrame, bestScore: DataFrame): DataFrame =
+    corpus
       .join(clusters, Seq("url"), "left")
       .join(bestScore, Seq("url"), "left")
       .select(
         col("url"),
         coalesce(col("cluster_id"), col("url")).as("cluster_id"),
-        col("score"),
+        col("new_score").as("score"),
         when(col("cluster_id").isNotNull, "linked").otherwise("nil").as("status"),
         col("text")
       )
-    withDeterministicSeq(joined, "url")
-  }
 
   /** Dry-run (reference `LION_DRY_RUN`, app/services/linker.py:100-123,
     * 742-839): deterministic all-NIL predictions with the FULL output schema
@@ -253,32 +264,35 @@ object LinkagePipeline {
     ok(df.queryExecution.analyzed)
   }
 
+  /** Candidate pairs: key-equality blocking plus any configured
+    * sorted-neighborhood window passes, deduped across sources.
+    */
+  def candidatePairs(corpus: DataFrame, keys: DataFrame, cfg: Config): DataFrame =
+    withWindowPairs(Blocker.pairs(keys, cfg.maxBlockSize), windowPairs(corpus, cfg))
+
+  /** The configured sorted-neighborhood passes over a (url, text) corpus,
+    * unioned; each pass's pairs carry the pseudo-key "sn:<i>:w<window>", so
+    * per-key thresholds and min-key dedup treat a pass as one block. None
+    * when no pass is configured.
+    */
+  private[graft] def windowPairs(corpus: DataFrame, cfg: Config): Option[DataFrame] =
+    if (cfg.windowPasses.isEmpty) None
+    else
+      Some(cfg.windowPasses.zipWithIndex.map { case ((sortExpr, w), i) =>
+        SortedNeighborhood.pairs(corpus, expr(sortExpr), w).withColumn("key", lit(s"sn:$i:w$w"))
+      }.reduce(_ unionByName _))
+
+  /** Key-block pairs plus any window pairs, deduped across sources: a pair
+    * found by both scores once, under its deterministic min key.
+    */
+  private[graft] def withWindowPairs(keyPairs: DataFrame, window: Option[DataFrame]): DataFrame =
+    window.fold(keyPairs)(wp => Blocker.minKeyPerPair(keyPairs.unionByName(wp)))
+
   /** Resumable variant of `run`: every stage commits a Parquet snapshot +
     * manifest through `io`, and a restarted run with the same config hash
     * resumes from the last committed stage (SURVEY.md §4.3). Stage DAG:
     * keys -> pairs -> accepted(score+threshold) -> cc_iter_* -> predictions.
     */
-  /** Candidate pairs: key-equality blocking plus any configured
-    * sorted-neighborhood window passes, deduped across sources (a pair
-    * found by both scores once, under its deterministic min key — window
-    * pairs carry the pseudo-key "sn:<i>:w<window>").
-    */
-  def candidatePairs(corpus: DataFrame, keys: DataFrame, cfg: Config): DataFrame = {
-    val base = Blocker.pairs(keys, cfg.maxBlockSize)
-    if (cfg.windowPasses.isEmpty) base
-    else {
-      val sn = cfg.windowPasses.zipWithIndex.map { case ((sortExpr, w), i) =>
-        SortedNeighborhood
-          .pairs(corpus, expr(sortExpr), w)
-          .withColumn("key", lit(s"sn:$i:w$w"))
-      }
-      (base +: sn)
-        .reduce(_ unionByName _)
-        .groupBy("urlA", "urlB")
-        .agg(min("key").as("key"))
-    }
-  }
-
   def runResumable(pages: DataFrame, cfg: Config, io: graft.io.TableIO): DataFrame = {
     val spark = pages.sparkSession
     val corpus = pages.select("url", "text")

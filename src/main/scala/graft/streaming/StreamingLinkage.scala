@@ -89,6 +89,24 @@ object StreamingLinkage {
     spark.read.parquet(s"$storeDir/predictions_v$v")
   }
 
+  /** Store version `v`'s predictions and index, refusing an index built
+    * under other blocking strategies than the batch's.
+    */
+  private def openVersion(
+      spark: SparkSession,
+      storeDir: String,
+      v: Int,
+      strategyNames: String
+  ): (DataFrame, IncrementalLinkage.Index) = {
+    val base = spark.read.parquet(s"$storeDir/predictions_v$v")
+    val (index, stored) = IncrementalLinkage.loadIndex(spark, s"$storeDir/index_v$v")
+    require(
+      stored == strategyNames,
+      s"store at $storeDir was built with strategies [$stored], batch uses [$strategyNames]"
+    )
+    (base, index)
+  }
+
   /** Link one batch of pages (url, text) into the store: bootstrap a base
     * run at v0 if the store is empty, else an O(delta) increment to
     * v<N+1>. Exposed for tests and for callers that already sit inside a
@@ -116,12 +134,7 @@ object StreamingLinkage {
         )
         commitVersion(spark, storeDir, 0)
       case Some(v) =>
-        val base = spark.read.parquet(s"$storeDir/predictions_v$v")
-        val (index, stored) = IncrementalLinkage.loadIndex(spark, s"$storeDir/index_v$v")
-        require(
-          stored == strategyNames,
-          s"store at $storeDir was built with strategies [$stored], batch uses [$strategyNames]"
-        )
+        val (base, index) = openVersion(spark, storeDir, v, strategyNames)
         val r = IncrementalLinkage.link(pages, base, index, cfg, reseq = false)
         r.predictions.write.mode("overwrite").parquet(s"$storeDir/predictions_v${v + 1}")
         if ((v + 1) % compactEvery == 0)
@@ -166,12 +179,7 @@ object StreamingLinkage {
     currentVersion(spark, storeDir) match {
       case None => ()
       case Some(v) =>
-        val base = spark.read.parquet(s"$storeDir/predictions_v$v")
-        val (index, stored) = IncrementalLinkage.loadIndex(spark, s"$storeDir/index_v$v")
-        require(
-          stored == strategyNames,
-          s"store at $storeDir was built with strategies [$stored], batch uses [$strategyNames]"
-        )
+        val (base, index) = openVersion(spark, storeDir, v, strategyNames)
         val r = IncrementalLinkage.remove(tombstones, base, index, cfg, reseq = false)
         r.predictions.write.mode("overwrite").parquet(s"$storeDir/predictions_v${v + 1}")
         IncrementalLinkage.saveIndex(r.index, s"$storeDir/index_v${v + 1}", strategyNames)

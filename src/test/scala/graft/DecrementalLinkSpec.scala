@@ -163,6 +163,8 @@ class DecrementalLinkSpec extends SparkSpec {
     // the merge relabeled {b3,b4} onto the surviving min label
     val merges = out.mergeMap.collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(merges.contains((baseBy("b3"), by("b0"))), s"mergeMap missing b-cluster merge: $merges")
+    // the upsert view covers the unaffected clusters the new adjacency merged
+    UpsertPatch.assertReproduces(basePred, out.changed, out.predictions, Some(out.removed))
     out.release()
   }
 
@@ -191,27 +193,8 @@ class DecrementalLinkSpec extends SparkSpec {
     val index = IncrementalLinkage.buildIndex(pages)
     val out = IncrementalLinkage.remove(rmUrls, basePred, index, reseq = false)
 
-    val cols = Seq("url", "cluster_id", "score", "status", "text")
     val changed = out.changed.cache()
-    val patched = basePred
-      .select(cols.map(col): _*)
-      .join(out.removed, Seq("url"), "left_anti") // apply tombstones
-      .join(changed.select(col("url"), lit(true).as("_hit")), Seq("url"), "left_anti")
-      .unionByName(
-        changed
-          .join(basePred.select(col("url"), col("text").as("_base_text")), Seq("url"), "left")
-          .select(
-            col("url"),
-            col("cluster_id"),
-            col("score"),
-            col("status"),
-            coalesce(col("text"), col("_base_text")).as("text")
-          )
-      )
-    val want = out.predictions.select(cols.map(col): _*).orderBy("url").collect()
-    val got = patched.orderBy("url").collect()
-    assert(got.length == want.length, s"${got.length} != ${want.length}")
-    got.zip(want).foreach { case (a, b) => assert(a == b, s"patched row differs:\n got =$a\n want=$b") }
+    UpsertPatch.assertReproduces(basePred, changed, out.predictions, Some(out.removed))
     // the upsert never ships text
     assert(changed.where(col("text").isNotNull).count() == 0)
     // window configs are refused

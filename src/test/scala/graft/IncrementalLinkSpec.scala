@@ -92,28 +92,8 @@ class IncrementalLinkSpec extends SparkSpec {
     val index = IncrementalLinkage.buildIndex(base)
     val inc = IncrementalLinkage.link(delta, basePred, index, reseq = false)
 
-    // patch the store: changed rows win by url; old rows keep their text
-    // (changed carries null text for them — linking never mutates text)
-    val cols = Seq("url", "cluster_id", "score", "status", "text")
     val changed = inc.changed.cache()
-    val patched = basePred
-      .select(cols.map(col): _*)
-      .join(changed.select(col("url"), lit(true).as("_hit")), Seq("url"), "left_anti")
-      .unionByName(
-        changed
-          .join(basePred.select(col("url"), col("text").as("_base_text")), Seq("url"), "left")
-          .select(
-            col("url"),
-            col("cluster_id"),
-            col("score"),
-            col("status"),
-            coalesce(col("text"), col("_base_text")).as("text")
-          )
-      )
-    val want = inc.predictions.select(cols.map(col): _*).orderBy("url").collect()
-    val got = patched.orderBy("url").collect()
-    assert(got.length == want.length, s"${got.length} != ${want.length}")
-    got.zip(want).foreach { case (a, b) => assert(a == b, s"patched row differs:\n got =$a\n want=$b") }
+    UpsertPatch.assertReproduces(basePred, changed, inc.predictions)
     // the upsert never re-ships base text, and is small: every changed old
     // row carries null text
     val oldChanged = changed.join(basePred.select("url"), Seq("url"), "left_semi")
@@ -172,6 +152,8 @@ class IncrementalLinkSpec extends SparkSpec {
     assert(byUrl("b19") == byUrl("d00"), "new-old boundary window link missing")
     assert(byUrl("d01") == byUrl("d02"), "new-new window link missing")
     assert(byUrl("b00") != byUrl("b01"), "unrelated neighbors must not link")
+    // the upsert view covers the window-refresh relabels and rescores too
+    UpsertPatch.assertReproduces(basePred, inc.changed, inc.predictions)
     inc.release()
   }
 
