@@ -1499,8 +1499,8 @@ object SparkEntry {
       val cols = Seq("url", "cluster_id", "status").map(col)
       val oldOut = IncrementalLinkage.relabel(baseStore, cl.mergeMap, bestNew).select(cols: _*)
       val newOut = LinkagePipeline.freshRows(delta.select("url", "text"), cl.assignments, bestNew).select(cols: _*)
-      LinkagePipeline
-        .withDeterministicSeq(oldOut.unionByName(newOut), "url")
+      graft.util.DeterministicSeq
+        .assign(oldOut.unionByName(newOut), "url")
         .select("url", "cluster_id", "status", "seq")
         .orderBy("url")
     }),

@@ -175,32 +175,31 @@ object ClusterEval {
     * are single divisions of exact counts or min/max of input scores —
     * no accumulation-order sensitivity anywhere.
     *
-    * Scale shape: one keyed aggregation per input frame plus one keyed
-    * join on cluster_id; output is one row per cluster. The giant-
-    * component hub this report exists to catch lands on one aggregation
-    * key — partial map-side combine absorbs it (counts/min/max, not
-    * row collection).
+    * Scale shape: one keyed aggregation of the edges per urlA (count,
+    * min, max), one left join of that onto `assignments` — read once —
+    * and one aggregation per cluster_id; output is one row per cluster.
+    * The giant-component hub this report exists to catch lands on one
+    * aggregation key — partial map-side combine absorbs it (counts/min/max,
+    * not row collection).
     */
   def diagnostics(assignments: DataFrame, edges: DataFrame): DataFrame = {
-    val members = assignments.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-    val e = edges
-      .join(assignments.select(col("url").as("urlA"), col("cluster_id")), "urlA")
+    val perUrl = edges
+      .groupBy(col("urlA").as("url"))
+      .agg(count(lit(1)).as("_e"), min("score").as("_lo"), max("score").as("_hi"))
+    assignments
+      .join(perUrl, Seq("url"), "left")
       .groupBy("cluster_id")
       .agg(
-        count(lit(1)).as("n_edges"),
-        min("score").as("min_score"),
-        max("score").as("max_score")
+        count(lit(1)).as("n_members"),
+        coalesce(sum("_e"), lit(0L)).as("n_edges"),
+        min("_lo").as("min_score"),
+        max("_hi").as("max_score")
       )
-    members
-      .join(e, Seq("cluster_id"), "left")
       .select(
         col("cluster_id"),
         col("n_members"),
-        coalesce(col("n_edges"), lit(0L)).as("n_edges"),
-        when(
-          col("n_members") > 1,
-          coalesce(col("n_edges"), lit(0L)) * 2.0 / (col("n_members") * (col("n_members") - 1))
-        ).as("density"),
+        col("n_edges"),
+        when(col("n_members") > 1, col("n_edges") * 2.0 / (col("n_members") * (col("n_members") - 1))).as("density"),
         col("min_score"),
         col("max_score")
       )

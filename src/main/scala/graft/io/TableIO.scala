@@ -181,8 +181,8 @@ final class RunLog(dir: String, runId: String) {
     */
   def append(rows: DataFrame, startSeq: Option[Long] = None): Unit = {
     val base = startSeq.getOrElse(nextSeq)
-    val stamped = graft.pipeline.LinkagePipeline
-      .withDeterministicSeq(rows, rows.columns.head)
+    val stamped = graft.util.DeterministicSeq
+      .assign(rows, rows.columns.head)
       .withColumn("seq", col("seq") - 1 + base)
       .withColumn("run_id", lit(runId))
       .withColumn("created_at", current_timestamp())

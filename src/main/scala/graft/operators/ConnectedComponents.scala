@@ -129,27 +129,16 @@ object ConnectedComponents {
     * large |E| (sf0.1 chain graph: 6.6s -> 11.3s), and wins when
     * iterations x edge bytes dominate — long-chain graphs at TB edge
     * volumes. Hence `run` calls it only mid-run, on graphs still iterating
-    * after `compactAfter` rounds. The caller passes the exact |E| from the
-    * convergence signature; sizing policy lives in DeterministicSeq.
+    * after `compactAfter` rounds. The seq pass needs no size estimate of
+    * its (checkpointed, badly estimated) input: its range exchange is
+    * sized by AQE from the measured map output.
     */
-  private def compactIds(edges: DataFrame, snapshot: DataFrame => DataFrame, edgeCount: Long): DataFrame = {
+  private def compactIds(edges: DataFrame, snapshot: DataFrame => DataFrame): DataFrame = {
     val nodes = edges
       .select(col("src").as("url"))
       .unionAll(edges.select(col("dst").as("url")))
       .distinct()
-    // The inputs here are iteration checkpoints whose LogicalRDD leaves
-    // PROPAGATE the pre-checkpoint plan estimate — after k star rounds
-    // (4 self-references each) that estimate is multiplicatively inflated
-    // garbage (measured: 6.6 TB for a 20 MB frame -> 50k range partitions
-    // -> a 93 s seq pass for a 5 s job). The loop knows |E| exactly from
-    // the convergence signature, so hand the seq pass the true size
-    // (|V| <= 2|E|, ~96 bytes per url row) and let assign() own the
-    // bytes->partitions policy.
-    snapshot(
-      graft.util.DeterministicSeq
-        .assign(nodes, "url", bytesHint = 2L * edgeCount * 96L)
-        .select(col("url"), col("seq").as("nid"))
-    )
+    snapshot(graft.util.DeterministicSeq.assign(nodes, "url").select(col("url"), col("seq").as("nid")))
   }
 
   private def mapEdges(edges: DataFrame, ids: DataFrame): DataFrame =
@@ -219,7 +208,7 @@ object ConnectedComponents {
     var iter = 0
     while (!converged && iter < maxIterations) {
       if (iter == compactAfter) {
-        val idMap = compactIds(edges, idSnapshot.getOrElse(graft.util.Checkpoints.serializedLocal), sig._1)
+        val idMap = compactIds(edges, idSnapshot.getOrElse(graft.util.Checkpoints.serializedLocal))
         ids = Some(idMap)
         // the signature hashes id VALUES, so the url-space sig is not
         // comparable to the nid-space one; reseed convergence from the

@@ -234,54 +234,27 @@ object Curation {
     *
     * Deterministic and Spark-first: the stream order is
     * (orderExpr, idCol) — pass e.g. `xxhash64(col(id))` for a stable
-    * pseudo-shuffle — and the global running token count is the same
-    * two-phase range-partition machinery as the W5 seq (rank within each
-    * range partition + driver-collected per-partition token totals,
-    * <= `rangePartitions` rows): NO global single-partition window at any
-    * scale, and the result is independent of the sampled range boundaries
-    * (moving a boundary moves rows between partitions, never reorders the
-    * stream). The ranged frame is materialized before the two passes for
-    * the same reason DeterministicSeq materializes (repartitionByRange
-    * samples per job).
+    * pseudo-shuffle — and the global running token count is
+    * [[graft.util.DeterministicSeq.runningSum]], the same kernel as the W5
+    * seq: NO global single-partition window at any scale, and the result
+    * is independent of the range boundaries AQE settles on.
     */
   def packSequences(
       docs: DataFrame,
       idCol: String,
       orderExpr: Column,
       nTokensExpr: Column,
-      budget: Long,
-      rangePartitions: Int = 0
+      budget: Long
   ): DataFrame = {
     require(budget >= 1, s"pack budget must be >= 1 token (got $budget)")
-    val spark = docs.sparkSession
-    val nParts =
-      if (rangePartitions > 0) rangePartitions
-      else
-        math.max(
-          spark.sparkContext.defaultParallelism,
-          spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-        )
     val keyed = docs.select(
       col("*"),
       struct(orderExpr.as("k"), col(idCol).cast("string").as("u")).as("_ord"),
       nTokensExpr.cast("long").as("_n")
     )
-    val ranged = graft.util.Checkpoints.serializedLocal(
-      keyed.repartitionByRange(nParts, col("_ord")).withColumn("_pid", spark_partition_id())
-    )
-    val parts = ranged.groupBy("_pid").agg(sum(col("_n")).as("_s")).orderBy("_pid").collect()
-    var acc = 0L
-    val offsets = parts.map { r =>
-      val o = (r.getInt(0), acc)
-      acc += (if (r.isNullAt(1)) 0L else r.getLong(1))
-      o
-    }.toSeq
-    import spark.implicits._
-    val offsetDf = offsets.toDF("_pid", "_off")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("_pid").orderBy("_ord")
-    ranged
-      .join(broadcast(offsetDf), "_pid")
-      .withColumn("start_pos", col("_off") + sum(col("_n")).over(w) - col("_n"))
+    graft.util.DeterministicSeq
+      .runningSum(keyed, "_ord", col("_n"), "_end")
+      .withColumn("start_pos", col("_end") - col("_n"))
       .withColumn("n_tokens", col("_n"))
       // `div` (integral divide), not floor(double division): exact at any
       // stream length, no 2^53 cliff
@@ -294,7 +267,7 @@ object Curation {
         "pack_id_end",
         greatest(col("pack_id"), expr(s"(start_pos + n_tokens - 1) div ${budget}L"))
       )
-      .drop("_pid", "_off", "_ord", "_n")
+      .drop("_end", "_ord", "_n")
   }
 
   /** Token-budget corpus cut: keep the PREFIX of the (orderExpr, idCol)
@@ -304,19 +277,19 @@ object Curation {
     * every later doc is dropped even if it would individually fit (the cut
     * is a deterministic stream position, so reruns and resumes agree).
     * Zero-token docs sitting exactly at the boundary are kept (they occupy
-    * no positions). Reuses [[packSequences]]'s two-phase range-partition
-    * running sum — no global window; output adds `start_pos`/`n_tokens`.
+    * no positions). Reuses [[packSequences]]'s running token sum
+    * ([[graft.util.DeterministicSeq.runningSum]]) — no global window;
+    * output adds `start_pos`/`n_tokens`.
     */
   def takeTokenBudget(
       docs: DataFrame,
       idCol: String,
       orderExpr: Column,
       nTokensExpr: Column,
-      budget: Long,
-      rangePartitions: Int = 0
+      budget: Long
   ): DataFrame = {
     require(budget >= 1, s"token budget must be >= 1 (got $budget)")
-    packSequences(docs, idCol, orderExpr, nTokensExpr, budget, rangePartitions)
+    packSequences(docs, idCol, orderExpr, nTokensExpr, budget)
       .where(col("start_pos") + col("n_tokens") <= budget)
       .drop("pack_id", "pack_offset", "pack_id_end")
   }

@@ -678,7 +678,7 @@ object IncrementalLinkage {
     def snapshot(root: String, keepLast: Int): DataFrame => DataFrame =
       cfg.checkpointDir
         .map(d => graft.util.Checkpoints.reliable(s"$d/$tag-$root", keepLast))
-        .getOrElse(LinkagePipeline.checkpointed)
+        .getOrElse(graft.util.Checkpoints.serializedLocal)
     val (feats, releaseFeats) = PairScorer.featuresWithIdf(scoreCorpus, idfParts)
     val scored = PairScorer.score(pairs, feats, cfg.weights)
     val accepted = snapshot("accepted", 0)(PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds))
@@ -687,7 +687,7 @@ object IncrementalLinkage {
       contractAndCluster(accepted, contractTo(accepted), cfg.maxCcIterations, snapshot("cc", 2))
     // the merge map is read by every downstream join AND returned; it is
     // tiny (affected clusters only) — materialize once
-    Relinked(comp, LinkagePipeline.checkpointed(mergeMap), LinkagePipeline.bestScores(accepted))
+    Relinked(comp, graft.util.Checkpoints.serializedLocal(mergeMap), LinkagePipeline.bestScores(accepted))
   }
 
   /** Base store rows relabeled through the merge map (broadcast: it is
@@ -743,6 +743,6 @@ object IncrementalLinkage {
 
   /** `rows` with the deterministic seq (`reseq`), else a null seq. */
   private def withSeq(rows: DataFrame, reseq: Boolean): DataFrame =
-    if (reseq) LinkagePipeline.withDeterministicSeq(rows, "url")
+    if (reseq) graft.util.DeterministicSeq.assign(rows, "url")
     else rows.withColumn("seq", lit(null).cast("long"))
 }

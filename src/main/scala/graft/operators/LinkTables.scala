@@ -76,8 +76,8 @@ object LinkTables {
       feats,
       cfg.weights
     )
-    val accepted = LinkagePipeline
-      .checkpointed(PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds))
+    val accepted =
+      graft.util.Checkpoints.serializedLocal(PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds))
     releaseFeats()
     val links = accepted.select(
       col("urlA").as("url_a"),

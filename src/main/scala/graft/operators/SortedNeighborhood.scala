@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * function, which is a single-partition serialization point. Instead:
   *
   *   1. the global rank comes from [[graft.util.DeterministicSeq.assign]]
-  *      — a range repartition by the sort key plus per-partition offsets
-  *      (two narrow passes, the same machinery the deterministic output
-  *      seq uses), so ranking parallelizes across the cluster;
+  *      — an AQE-sized range repartition by the sort key, driver-side
+  *      per-partition offsets and a running count within each range (the
+  *      kernel behind the deterministic output seq), so ranking
+  *      parallelizes across the cluster;
   *   2. window pairs come from an EQUI-join on rank: each row explodes to
   *      its w-1 successor ranks and joins the rank column directly. Every
   *      rank matches exactly one row and generates exactly w-1 candidates,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators._
+import graft.util.{Checkpoints, DeterministicSeq}
 
 /** The end-to-end record-linkage DAG (SURVEY.md §3.1 re-architecture):
   *
@@ -62,8 +63,11 @@ object LinkagePipeline {
   def defaultMaster: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"
 
   /** Spark session tuned for the engine: AQE + skew join on, shuffle
-    * partition count from the env (sized to cores locally; on a real
-    * cluster AQE coalesces the rest).
+    * partition count from the caller (sized to cores locally; on a real
+    * cluster AQE coalesces the rest). Every exchange the engine plans is
+    * sized this way — the deterministic seq's range exchange included
+    * (graft.util.DeterministicSeq); at cluster scale raise its starting
+    * width with `spark.sql.adaptive.coalescePartitions.initialPartitionNum`.
     */
   def session(master: String, appName: String = "graft-linkage", shufflePartitions: Int = 32): SparkSession = {
     val builder0 = SparkSession.builder()
@@ -156,9 +160,9 @@ object LinkagePipeline {
     // so it must survive the whole run; CC iterations only ever read the
     // latest frame and rotate keep-last-2 to bound durable storage.
     val edgeSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir.map(d => graft.util.Checkpoints.reliable(s"$d/accepted")).getOrElse(checkpointed)
+      cfg.checkpointDir.map(d => Checkpoints.reliable(s"$d/accepted")).getOrElse(Checkpoints.serializedLocal)
     val ccSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir.map(d => graft.util.Checkpoints.reliable(s"$d/cc", keepLast = 2)).getOrElse(checkpointed)
+      cfg.checkpointDir.map(d => Checkpoints.reliable(s"$d/cc", keepLast = 2)).getOrElse(Checkpoints.serializedLocal)
     val acceptedCk = edgeSnapshot(accepted)
     releaseFeats() // pair join materialized; drop the tokenize+hash cache
 
@@ -169,7 +173,7 @@ object LinkagePipeline {
       ccSnapshot,
       // the ids map outlives the iterations (read again by the final
       // map-back), so durable runs give it its own NON-rotating root
-      idSnapshot = cfg.checkpointDir.map(d => graft.util.Checkpoints.reliable(s"$d/cc-ids"))
+      idSnapshot = cfg.checkpointDir.map(d => Checkpoints.reliable(s"$d/cc-ids"))
     )
 
     phase("assemble")
@@ -189,14 +193,14 @@ object LinkagePipeline {
     * re-linking a previous output) cannot collide with the prediction
     * schema — status
     * derivation, and the deterministic seq. ONE materialization:
-    * withDeterministicSeq checkpoints its range-partitioned input (needed
+    * DeterministicSeq.assign checkpoints its range-partitioned input (needed
     * anyway for stable boundaries across its two passes), which also keeps
     * the caller's sink action from re-executing the join chain — no
     * separate checkpoint of the joined frame (that would serialize the
     * full text column twice).
     */
   def assemblePredictions(corpus: DataFrame, clusters: DataFrame, accepted: DataFrame): DataFrame =
-    withDeterministicSeq(freshRows(corpus, clusters, bestScores(accepted)), "url")
+    DeterministicSeq.assign(freshRows(corpus, clusters, bestScores(accepted)), "url")
 
   /** Best accepted score per url over an edge frame (urlA, urlB, score):
     * (url, new_score).
@@ -243,11 +247,8 @@ object LinkagePipeline {
         lit("nil").as("status"),
         col("text")
       )
-    withDeterministicSeq(out, "url")
+    DeterministicSeq.assign(out, "url")
   }
-
-  /** See graft.util.Checkpoints.serializedLocal. */
-  def checkpointed(df: DataFrame): DataFrame = graft.util.Checkpoints.serializedLocal(df)
 
   /** True when the analyzed plan is just a (projected/filtered) source
     * relation — re-scanning it column-pruned beats caching it.
@@ -357,11 +358,4 @@ object LinkagePipeline {
       io.commitStage(assemblePredictions(corpus, clusters, accepted), "predictions", Seq("accepted"))
     }
   }
-
-  /** See graft.util.DeterministicSeq.assign (kept as the public pipeline
-    * API; the implementation lives in util so operators — e.g. the CC
-    * node-id compaction — can reuse it without a package cycle).
-    */
-  def withDeterministicSeq(df: DataFrame, orderCol: String, rangePartitions: Int = 0): DataFrame =
-    graft.util.DeterministicSeq.assign(df, orderCol, rangePartitions)
 }

@@ -231,7 +231,7 @@ object StreamingLinkage {
     val v = currentVersion(spark, storeDir)
       .getOrElse(sys.error(s"no committed store at $storeDir"))
     val snap = spark.read.parquet(s"$storeDir/predictions_v$v")
-    val stamped = LinkagePipeline.withDeterministicSeq(snap.drop("seq"), "url")
+    val stamped = graft.util.DeterministicSeq.assign(snap.drop("seq"), "url")
     val dst = outDir.getOrElse(s"$storeDir/predictions_v${v}_final")
     stamped.write.mode("overwrite").parquet(dst)
     dst

@@ -40,7 +40,10 @@ object QueryProbe {
     ledger.foreach { l =>
       val snap = l.snapshot()
       l.remove()
-      println(f"[probe] $name warm$reps: ${snap.jobs.size} jobs, job-sum ${snap.jobs.map(_.wallS).sum}%.2f s")
+      println(
+        f"[probe] $name warm$reps: ${snap.jobs.size} jobs, job-sum ${snap.jobs.map(_.wallS).sum}%.2f s, " +
+          f"task cpu ${snap.total.cpuNs / 1e9}%.2f s"
+      )
       (snap.jobLines ++ snap.siteLines).foreach(println)
     }
     if (!sys.env.contains("GRAFT_PROBE_NO_PLAN")) {

@@ -160,6 +160,14 @@ class CurationSpec extends SparkSpec {
     assert(got(2L) == "no pii here just words and the number 42")
   }
 
+  /** The running token sum's range exchange takes the session width; with
+    * AQE coalescing off, `n` is a real range-partition count.
+    */
+  private def rangeWidth[T](n: Int)(body: => T): T = withConf(
+    "spark.sql.shuffle.partitions" -> n.toString,
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+  )(body)
+
   test("packSequences: closed-form stream positions, span packs, zero-token docs, partition-invariance") {
     // order by id itself -> stream order d0,d1,... and positions are the
     // hand-computable prefix sums of the token counts
@@ -170,13 +178,14 @@ class CurationSpec extends SparkSpec {
       ("d3", 0L), // zero tokens: occupies no stream positions
       ("d4", 5L)
     ).toDF("id", "n")
-    def run(parts: Int) =
+    def run(parts: Int) = rangeWidth(3) {
       Curation
-        .packSequences(docs.repartition(parts), "id", col("id"), col("n"), budget = 10L, rangePartitions = 3)
+        .packSequences(docs.repartition(parts), "id", col("id"), col("n"), budget = 10L)
         .select("id", "n_tokens", "start_pos", "pack_id", "pack_offset", "pack_id_end")
         .collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
         .toMap
+    }
     val got = run(1)
     assert(got("d0") == ((3L, 0L, 0L, 0L, 0L)))
     assert(got("d1") == ((7L, 3L, 0L, 3L, 0L)), got("d1").toString) // ends exactly at the pack cut
@@ -186,12 +195,14 @@ class CurationSpec extends SparkSpec {
     // the layout is a function of (order key, counts) alone — not of the
     // input partitioning or the range-partition count
     assert(run(7) == got, "packing must be partition-invariant")
-    val wide = Curation
-      .packSequences(docs.repartition(5), "id", col("id"), col("n"), budget = 10L, rangePartitions = 11)
-      .select("id", "start_pos")
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
+    val wide = rangeWidth(11) {
+      Curation
+        .packSequences(docs.repartition(5), "id", col("id"), col("n"), budget = 10L)
+        .select("id", "start_pos")
+        .collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+        .toMap
+    }
     assert(wide == got.view.mapValues(_._2).toMap, "range-partition count must not change positions")
   }
 
@@ -203,13 +214,14 @@ class CurationSpec extends SparkSpec {
       ("d3", 0L), // zero-token doc AFTER the crossing doc: still dropped (prefix, except...)
       ("d4", 2L) // would fit on its own: still dropped (prefix, not knapsack)
     ).toDF("id", "n")
-    def ids(budget: Long, parts: Int = 3) =
+    def ids(budget: Long, parts: Int = 3) = rangeWidth(3) {
       Curation
-        .takeTokenBudget(docs.repartition(parts), "id", col("id"), col("n"), budget, rangePartitions = 3)
+        .takeTokenBudget(docs.repartition(parts), "id", col("id"), col("n"), budget)
         .select("id")
         .collect()
         .map(_.getString(0))
         .toSet
+    }
     assert(ids(10L) === Set("d0", "d1"))
     assert(ids(9L) === Set("d0")) // d1 no longer fits entirely
     assert(ids(37L) === Set("d0", "d1", "d2", "d3", "d4")) // exact total fit
@@ -217,7 +229,7 @@ class CurationSpec extends SparkSpec {
     assert(ids(10L, parts = 7) === Set("d0", "d1"), "cut must be partition-invariant")
     // output schema: pack columns are gone, start_pos/n_tokens remain
     val cols = Curation
-      .takeTokenBudget(docs, "id", col("id"), col("n"), 10L, rangePartitions = 3)
+      .takeTokenBudget(docs, "id", col("id"), col("n"), 10L)
       .columns
       .toSet
     assert(cols === Set("id", "n", "n_tokens", "start_pos"))

@@ -54,49 +54,20 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("seq is identical across range-partition counts (boundary independence)") {
+    // the range exchange takes its width from the session: with AQE
+    // coalescing off, each width is a real range-partition count
     val df = pages.select("url", "text")
-    def seqs(parts: Int) = LinkagePipeline
-      .withDeterministicSeq(df, "url", parts)
-      .select("url", "seq").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    def seqs(width: Int) = withConf(
+      "spark.sql.shuffle.partitions" -> width.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+    ) {
+      graft.util.DeterministicSeq
+        .assign(df, "url")
+        .select("url", "seq").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    }
     assert(seqs(16) == seqs(64))
-    // and the derived default (rangePartitions = 0 -> bytes heuristic)
-    assert(seqs(16) == seqs(0))
-  }
-
-  test("seq is identical across bytesHint values (hint sizes, never reorders)") {
-    val df = pages.select("url", "text")
-    def viaHint(bytes: Long) = graft.util.DeterministicSeq
-      .assign(df, "url", bytesHint = bytes)
-      .select("url", "seq")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .toSet
-    // 1 byte -> parallelism-floor width; 60 GiB -> the 128 MB policy asks
-    // for ~481 ranges (mostly empty here) — same dense order either way,
-    // and both must match the no-hint stats path
-    val tiny = viaHint(1L)
-    assert(tiny == viaHint(60L * 1024 * 1024 * 1024))
-    assert(tiny == viaHint(0L))
-  }
-
-  test("seq width policy distrusts checkpointed-leaf stats (propagated join estimates)") {
-    // a localCheckpoint leaf either reports the ~8-EB sentinel or PROPAGATES
-    // the pre-checkpoint plan estimate; a self-join inflates that estimate
-    // multiplicatively while staying under the plausibility cutoff — the
-    // width policy must fall back to the session width, not believe it
-    val base = pages.select("url", "text")
-    val ck = graft.util.Checkpoints.serializedLocal(
-      base.select(col("url").as("u1")).crossJoin(base.select(col("url").as("u2")).limit(3))
-    )
-    val planned = graft.util.DeterministicSeq.plannedRangePartitions(ck)
-    val fallback = math.max(
-      spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    )
-    assert(planned == fallback, s"expected fallback width $fallback, got $planned")
-    // honest parquet/local leaves still size by bytes: tiny in-memory frame
-    // -> parallelism floor
-    assert(graft.util.DeterministicSeq.plannedRangePartitions(base) >= 1)
+    // and the single-range degenerate case
+    assert(seqs(16) == seqs(1))
   }
 
   test("zero-weight scoring legs skip their kernel without changing the combined score") {
