@@ -161,7 +161,7 @@ object GoldEval {
       .select(col("url"), coalesce(col("predicted_id"), lit("NIL")).as("predicted_id"), col("score"))
   }
 
-  /** Full-kernel linking: block -> PairScorer (JW + banded Levenshtein +
+  /** Full-kernel linking: block -> PairScorer (JW + thresholded Levenshtein +
     * TF-IDF cosine) -> top-1 decision. Returns (url, predicted_id, score).
     */
   def link(

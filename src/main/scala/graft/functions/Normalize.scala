@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.SimilarityFunctions.lev_distance
+
 /** Column-level normalization expressions (pure Catalyst, codegen'd).
   *
   * Reference string semantics mirrored:
@@ -97,17 +99,18 @@ object Normalize {
     */
   def levRatio(a: Column, b: Column): Column = {
     val m = greatest(length(a), length(b))
-    when(m === 0, lit(1.0)).otherwise(lit(1.0) - levenshtein(a, b).cast("double") / m)
+    when(m === 0, lit(1.0)).otherwise(lit(1.0) - lev_distance(a, b).cast("double") / m)
   }
 
-  /** Banded variant: distances beyond `maxDist` are clamped (Spark's
-    * thresholded levenshtein returns -1 past the band and runs
-    * O(len*band) instead of O(len^2) — pairs that far apart are far below
-    * any match threshold anyway).
+  /** Thresholded variant: distances beyond `maxDist` count as `maxDist`
+    * (pairs that far apart are far below any match threshold anyway). The
+    * bit-parallel kernel costs ⌈min(len)/64⌉ word steps per char of the
+    * longer string whatever `maxDist` is; the threshold only lets it stop
+    * early, at once when the lengths differ by more than `maxDist`.
     */
   def levRatioBanded(a: Column, b: Column, maxDist: Int): Column = {
     val m = greatest(length(a), length(b))
-    val d = levenshtein(a, b, maxDist).cast("double")
+    val d = lev_distance(a, b, maxDist).cast("double")
     val dEff = when(d < 0, least(lit(maxDist.toDouble), m.cast("double"))).otherwise(d)
     when(m === 0, lit(1.0)).otherwise(lit(1.0) - dEff / m)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static similarity kernels referenced by the generated code — keeping the
@@ -17,7 +18,7 @@ object SimKernels {
   /** Jaro-Winkler similarity in [0,1]; standard p=0.1, prefix<=4, boost
     * threshold 0.7. Replaces the reference's LLM scoring black box
     * (/root/reference/lion_linker/core.py:133-222) with a deterministic
-    * kernel; built-in `levenshtein` covers the edit-distance leg.
+    * kernel; [[levenshtein]] covers the edit-distance leg.
     */
   def jaroWinkler(aStr: UTF8String, bStr: UTF8String): Double = {
     val a = aStr.toString
@@ -65,6 +66,73 @@ object SimKernels {
     jaro + prefix * 0.1 * (1.0 - jaro)
   }
 
+  /** Levenshtein distance over chars with Spark's contract
+    * (`UTF8String.levenshteinDistance(other, maxDist)`): −1 when the
+    * distance exceeds `maxDist`; `Int.MaxValue` is the unthresholded form.
+    * Myers' bit-vector algorithm (JACM 1999) with Hyyrö's multi-word
+    * blocking: the shorter string is the pattern, held as one 64-bit word
+    * per 64 chars, and each text char advances every word with a fixed
+    * handful of word operations, so a pair costs O(⌈m/64⌉·n) instead of
+    * the built-in's O(m·n) — two words per column for the 120-char
+    * `text_cap`. Chars are the UTF-8 sequences Spark counts
+    * (`numBytesForFirstByte`), equal when their bytes are. Nothing is
+    * allocated per row once `s` has grown to the inputs.
+    */
+  def levenshtein(aStr: UTF8String, bStr: UTF8String, maxDist: Int, s: LevScratch): Int = {
+    val la = s.decodeA(aStr)
+    val lb = s.decodeB(bStr)
+    val m = math.min(la, lb)
+    val n = math.max(la, lb)
+    if (n - m > maxDist) return -1
+    if (m == 0) return n
+    val p = if (la <= lb) s.a else s.b
+    val t = if (la <= lb) s.b else s.a
+    val blocks = (m + 63) >>> 6
+    s.buildPeq(p, m, blocks)
+    val peq = s.peq
+    val vp = s.vp
+    val vn = s.vn
+    java.util.Arrays.fill(vp, 0, blocks, -1L)
+    java.util.Arrays.fill(vn, 0, blocks, 0L)
+    val lastBit = 1L << ((m - 1) & 63)
+    var score = m
+    var j = 0
+    while (j < n) {
+      val row = s.rowOf(t(j), blocks)
+      // horizontal delta entering the block's top row: D[0][j] = j
+      var hin = 1
+      var k = 0
+      while (k < blocks) {
+        var eq = if (row < 0) 0L else peq(row + k)
+        val pv = vp(k)
+        val mv = vn(k)
+        val xv = eq | mv
+        if (hin < 0) eq |= 1L
+        val xh = (((eq & pv) + pv) ^ pv) | eq
+        val ph = mv | ~(xh | pv)
+        val mh = pv & xh
+        val high = if (k == blocks - 1) lastBit else Long.MinValue
+        val hout = if ((ph & high) != 0) 1 else if ((mh & high) != 0) -1 else 0
+        val phs = (ph << 1) | (if (hin > 0) 1L else 0L)
+        val mhs = (mh << 1) | (if (hin < 0) 1L else 0L)
+        vp(k) = mhs | ~(xv | phs)
+        vn(k) = phs & xv
+        hin = hout
+        k += 1
+      }
+      score += hin
+      j += 1
+      // each remaining column lowers the distance by at most one (the
+      // last column checks the distance itself)
+      if (score - (n - j) > maxDist) {
+        s.clearPeq(m, blocks)
+        return -1
+      }
+    }
+    s.clearPeq(m, blocks)
+    score
+  }
+
   /** TRUE Damerau–Levenshtein distance (Lowrance–Wagner 1975): minimum
     * insertions, deletions, substitutions, and transpositions of ADJACENT
     * characters — unlike the restricted OSA variant, a transposed block may
@@ -73,8 +141,8 @@ object SimKernels {
     * builtin. Operates on code points (UTF-16 surrogate pairs count once,
     * like DuckDB). O(|a|·|b|) time AND memory (the transposition recurrence
     * reads arbitrary earlier rows) — meant for short key fields (names,
-    * titles, URL slugs), not document bodies; the banded built-in
-    * `levenshtein` remains the long-text edit distance.
+    * titles, URL slugs), not document bodies; [[levenshtein]] remains the
+    * long-text edit distance.
     */
   def damerauLevenshtein(aStr: UTF8String, bStr: UTF8String): Int = {
     val a = aStr.toString.codePoints().toArray
@@ -697,6 +765,133 @@ object SimKernels {
   }
 }
 
+/** Reused state of [[SimKernels.levenshtein]]: both strings' chars and the
+  * pattern's match vectors, grown on demand. One per generated-code
+  * instance (a task) or per interpreted expression, never shared across
+  * threads.
+  */
+final class LevScratch {
+  private[functions] var a = new Array[Int](128)
+  private[functions] var b = new Array[Int](128)
+  private[functions] var vp = new Array[Long](2)
+  private[functions] var vn = new Array[Long](2)
+  /** Match vectors, `blocks` words per row: bit i of word k is set when
+    * pattern char 64k+i is the row's char. Rows 0-127 are the ASCII
+    * chars; the pattern's other chars get rows from 128 on through the
+    * open-addressing map below. All zero between calls.
+    */
+  private[functions] var peq = new Array[Long](256 * 2)
+  private var rowAt = new Array[Int](128)
+  private var slotKey = new Array[Int](256)
+  private var slotRow = new Array[Int](256) // 0 = empty slot
+  private var shift = 24
+  private var used = new Array[Int](128)
+  private var nUsed = 0
+
+  private[functions] def decodeA(u: UTF8String): Int = {
+    if (a.length < u.numBytes) a = new Array[Int](u.numBytes * 2)
+    decode(u, a)
+  }
+
+  private[functions] def decodeB(u: UTF8String): Int = {
+    if (b.length < u.numBytes) b = new Array[Int](u.numBytes * 2)
+    decode(u, b)
+  }
+
+  /** Writes `u`'s chars to `out`; returns their count. A char is the run
+    * of bytes `numBytesForFirstByte` gives its first byte, packed
+    * big-endian into one int (the lead byte fixes the run length, so
+    * distinct runs get distinct ints and ASCII keeps its code point).
+    */
+  private def decode(u: UTF8String, out: Array[Int]): Int = {
+    val nb = u.numBytes
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    var i = 0
+    var n = 0
+    while (i < nb) {
+      val b0 = Platform.getByte(base, off + i)
+      if (b0 >= 0) {
+        out(n) = b0
+        i += 1
+      } else {
+        val len = math.min(UTF8String.numBytesForFirstByte(b0), nb - i)
+        var key = b0 & 0xff
+        var k = 1
+        while (k < len) {
+          key = (key << 8) | (Platform.getByte(base, off + i + k) & 0xff)
+          k += 1
+        }
+        out(n) = key
+        i += len
+      }
+      n += 1
+    }
+    n
+  }
+
+  private def slot(c: Int): Int = {
+    var h = (c * 0x9e3779b9) >>> shift
+    while (slotRow(h) != 0 && slotKey(h) != c) h = (h + 1) & (slotRow.length - 1)
+    h
+  }
+
+  /** Sets the match vectors of pattern `p(0 until m)`. */
+  private[functions] def buildPeq(p: Array[Int], m: Int, blocks: Int): Unit = {
+    if (peq.length < (128 + m) * blocks) peq = new Array[Long]((128 + m) * blocks * 2)
+    if (vp.length < blocks) { vp = new Array[Long](blocks * 2); vn = new Array[Long](blocks * 2) }
+    if (rowAt.length < m) { rowAt = new Array[Int](m * 2); used = new Array[Int](m * 2) }
+    if (slotRow.length < 2 * m) {
+      val bits = 32 - Integer.numberOfLeadingZeros(2 * m - 1)
+      slotKey = new Array[Int](1 << bits)
+      slotRow = new Array[Int](1 << bits)
+      shift = 32 - bits
+    }
+    var next = 128 * blocks
+    var i = 0
+    while (i < m) {
+      val c = p(i)
+      val row =
+        if ((c & ~0x7f) == 0) c * blocks
+        else {
+          val h = slot(c)
+          if (slotRow(h) == 0) {
+            slotKey(h) = c
+            slotRow(h) = next
+            used(nUsed) = h
+            nUsed += 1
+            next += blocks
+          }
+          slotRow(h)
+        }
+      rowAt(i) = row
+      peq(row + (i >>> 6)) |= 1L << (i & 63)
+      i += 1
+    }
+  }
+
+  /** Row offset of text char `c` in `peq`, or −1 when the pattern lacks it. */
+  private[functions] def rowOf(c: Int, blocks: Int): Int =
+    if ((c & ~0x7f) == 0) c * blocks
+    else {
+      val r = slotRow(slot(c))
+      if (r == 0) -1 else r
+    }
+
+  /** Restores the all-zero state after [[buildPeq]]. */
+  private[functions] def clearPeq(m: Int, blocks: Int): Unit = {
+    var i = 0
+    while (i < m) {
+      peq(rowAt(i) + (i >>> 6)) = 0L
+      i += 1
+    }
+    while (nUsed > 0) {
+      nUsed -= 1
+      slotRow(used(nUsed)) = 0
+    }
+  }
+}
+
 /** Jaro-Winkler similarity as a native binary expression (codegen'd). */
 case class JaroWinkler(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -706,6 +901,25 @@ case class JaroWinkler(left: Expression, right: Expression) extends BinaryExpres
     SimKernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SimKernels.jaroWinkler($a, $b)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** [[SimKernels.levenshtein]] as a native binary expression (codegen'd):
+  * Spark's `levenshtein(a, b, maxDist)` contract, −1 past `maxDist`.
+  */
+case class LevDistance(left: Expression, right: Expression, maxDist: Int) extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "lev_distance"
+  @transient private lazy val scratch = new LevScratch
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SimKernels.levenshtein(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], maxDist, scratch)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[LevScratch].getName
+    val s = ctx.addMutableState(cls, "levScratch", v => s"$v = new $cls();")
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SimKernels.levenshtein($a, $b, $maxDist, $s)")
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -967,6 +1181,9 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 object SimilarityFunctions {
   private def e(c: Column): Expression = GraftShim.expression(c)
   def jaro_winkler(a: Column, b: Column): Column = GraftShim.column(JaroWinkler(e(a), e(b)))
+  /** Levenshtein distance over chars, −1 past `maxDist` (default: none). */
+  def lev_distance(a: Column, b: Column, maxDist: Int = Int.MaxValue): Column =
+    GraftShim.column(LevDistance(e(a), e(b), maxDist))
   def damerau_levenshtein(a: Column, b: Column): Column =
     GraftShim.column(DamerauLevenshtein(e(a), e(b)))
   def sorted_vec_dot(a: Column, b: Column): Column = GraftShim.column(SortedVecDot(e(a), e(b)))

@@ -167,11 +167,18 @@ final case class BlockingStats(
 
 object Blocker {
 
-  /** Union of all strategies' keys, deduped. Output: (url, key). */
+  /** Union of all strategies' keys, deduped. Output: (url, key), both
+    * non-null. A null url or key never pairs in the key self-join, so those
+    * rows are dropped here and do not count toward a block's size. The
+    * explicit filter also gives the salting and self-join branches of
+    * [[pairs]] one identical key plan, so AQE reuses its exchange and the
+    * key stage runs once.
+    */
   def allKeys(pages: DataFrame, strategies: Seq[BlockingStrategy]): DataFrame =
     strategies
       .map(s => s.keys(pages).select(col("url"), col("key")))
       .reduce(_ unionByName _)
+      .where(col("url").isNotNull && col("key").isNotNull)
       .distinct()
 
   /** Split blocks larger than `maxBlockSize` into deterministic sub-buckets

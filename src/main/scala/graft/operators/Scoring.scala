@@ -27,7 +27,7 @@ object PairScorer {
     * does cheap kernel math — never re-tokenizes per pair.
     *
     * Output: url, title_norm (first 10 tokens), text_cap (first 120 chars
-    * of ws-normalized text — see the band-cost note at the cap), tfidf
+    * of ws-normalized text — see the cost note at the cap), tfidf
     * (struct<ts:array<long>, ws:array<double>> parallel primitive arrays
     * sorted by ts, L2-normalized — SparseVec's layout).
     */
@@ -115,8 +115,9 @@ object PairScorer {
         col("url"),
         SimilarityFunctions.term_freqs(toks, TfBuckets).as("tf"), // in-row, no shuffle
         array_join(slice(toks, 1, 10), " ").as("title_norm"),
-        // 120 chars: the banded Levenshtein leg is O(len*band); doubling the
-        // cap quadruples the dominant pair kernel for negligible signal gain
+        // 120 chars: the Levenshtein leg takes ⌈len/64⌉ word steps per char
+        // (two words here); doubling the cap quadruples the pair kernel's
+        // work for negligible signal gain
         substring(regexp_replace(trim(col("text")), "\\s+", " "), 1, 120).as("text_cap")
       )
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -203,7 +204,7 @@ object PairScorer {
       col("tfidf").as("vec_b")
     )
     // zero-weight legs skip their kernel outright (the symbolic lev-only
-    // configs pay only the lev band, not all three kernels per pair). The
+    // configs pay only the lev kernel, not all three kernels per pair). The
     // combined `score` is bit-identical — every kernel returns a finite
     // value, so 0.0 * w == kernel * 0.0 == 0.0 — but the skipped leg's
     // OWN column reads 0.0 instead of the kernel value; consumers of raw

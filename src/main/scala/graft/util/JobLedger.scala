@@ -72,8 +72,11 @@ final class JobLedger private (sc: SparkContext) extends SparkListener {
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
     val info = e.stageInfo
     add(stagePhase.getOrElse(info.stageId, "other"), Counters(stages = 1))
-    stageJob.get(info.stageId).flatMap(started.get).foreach(j => started(j.id) = j.copy(stages = j.stages + 1))
-    val site = info.name.split(" at ").last
+    val job = stageJob.get(info.stageId).flatMap(started.get)
+    job.foreach(j => started(j.id) = j.copy(stages = j.stages + 1))
+    // the owning job's resolved site: an AQE stage's own name is the JDK
+    // frame of the thread that submitted it
+    val site = job.map(_.site).filter(_ != "?").getOrElse(info.name.split(" at ").last)
     stageRunMs(site) = stageRunMs.getOrElse(site, 0L) + info.taskMetrics.executorRunTime
   }
 
@@ -159,7 +162,9 @@ object JobLedger {
       f"[phase] ${c.runMs / 1e3}%8.1f s  $p%-12s jobs=${c.jobs} stages=${c.stages} cpu=${c.cpuNs / 1e9}%.1f s"
     }
 
-    /** The twelve costliest stage call sites by task run time. */
+    /** Task run time per call site of the stages' jobs, the twelve
+      * costliest.
+      */
     def stageLines: Seq[String] = stageRunMs.toSeq.sortBy(-_._2).take(12).map { case (s, ms) =>
       f"[stage] ${ms / 1e3}%8.1f s  $s"
     }

@@ -58,6 +58,9 @@ class JobLedgerSpec extends SparkSpec {
     assert(snap.total.jobs == snap.jobs.size)
     // AQE's off-thread shuffle jobs take their SQL execution's call site
     assert(snap.jobs.forall(_.site != "?"), snap.jobs.filter(_.site == "?"))
+    // and their stages' task time goes to that site, not to the JDK frame
+    // (CompletableFuture.java) of the thread that submitted them
+    assert(snap.stageRunMs.nonEmpty && snap.stageRunMs.keys.forall(!_.contains(".java:")), snap.stageLines)
   }
 
   test("--monitor true reports task counters, the phase table, and leaks no listener") {

@@ -48,6 +48,10 @@ class PlanAuditSpec extends SparkSpec {
     // "*(n)" node prefixes mark whole-stage-codegen spans; the kernel
     // projection and both feature joins must carry one
     assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("jaro_winkler")), plan)
+    // the bit-parallel Levenshtein kernel sits in a codegen span, and the
+    // built-in O(m*n) levenshtein is gone from the scoring projection
+    assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("lev_distance(")), plan)
+    assert(!plan.linesIterator.exists(l => l.contains("jaro_winkler") && l.contains("levenshtein(")), plan)
     assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("BroadcastHashJoin")), plan)
     // the similarity kernels are codegen'd expressions, not udfs
     assert(!plan.toLowerCase.contains("batchevalpython") && !plan.contains("ScalaUDF"), plan)
@@ -190,5 +194,35 @@ class PlanAuditSpec extends SparkSpec {
         ledger.snapshot().jobs
       } finally ledger.remove()
     assert(jobs.size <= 20, jobs.map(j => s"${j.id} ${j.site}").mkString("\n"))
+  }
+
+  test("a seq pass runs its running sum without a hash exchange on _pid") {
+    import spark.implicits._
+    val df = (0 until 3000).map(i => (f"u${(i * 7919) % 3000}%05d", s"text $i")).toDF("url", "text").repartition(5)
+    val out = graft.util.DeterministicSeq.assign(df, "url")
+    assert(out.select("seq").as[Long].collect().sorted.toSeq == (1L to 3000L))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning(_pid"), plan)
+    // below the range checkpoint: a local sort and one partition pass
+    val lineage = out.queryExecution.toRdd.toDebugString
+    assert(!lineage.contains("ShuffledRowRDD"), lineage)
+  }
+
+  test("block+score job budget: a Parquet corpus blocks and scores in at most 11 Spark jobs") {
+    // Parquet, as the CLI and the benchmark read it: over a scan, the
+    // salting and self-join branches of Blocker.pairs infer different
+    // isnotnull filters unless allKeys filters nulls itself, and the key
+    // stage then runs twice (12 jobs)
+    val src = Files.createTempDirectory("graft-audit-corpus").toString + "/p"
+    graft.synth.WebCorpus.pages(spark, graft.synth.WebCorpus.Config(numClusters = 60, seed = 3L)).toDF()
+      .write.parquet(src)
+    val pages = spark.read.parquet(src)
+    val ledger = graft.util.JobLedger.install(spark.sparkContext)
+    val jobs =
+      try {
+        graft.pipeline.LinkagePipeline.run(pages).collect()
+        ledger.snapshot().jobs.filter(_.phase == "block+score")
+      } finally ledger.remove()
+    assert(jobs.size <= 11, jobs.map(j => s"${j.id} ${j.site}").mkString("\n"))
   }
 }
