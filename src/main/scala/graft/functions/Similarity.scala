@@ -1227,18 +1227,4 @@ object SimilarityFunctions {
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.bit_count(a.bitwiseXOR(b)).cast("int")
-
-  /** Register SQL names (FunctionRegistry) for ad-hoc spark.sql use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("jaro_winkler", es => JaroWinkler(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "damerau_levenshtein",
-      es => DamerauLevenshtein(es(0), es(1)),
-      "scala_udf"
-    )
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_vec_dot", es => SortedVecDot(es(0), es(1)), "scala_udf")
-  }
 }

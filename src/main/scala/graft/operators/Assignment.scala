@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one symmetrization (map-only union), two keyed
   * aggregations (max score per node, min partner among argmax), one
   * self-join of the best-partner frame, two anti-joins to shrink the
-  * pool. No windows, no collects; the driver loop is bounded by
-  * `maxRounds` (diminishing pools — the same bounded-iteration shape as
-  * ConnectedComponents.run, with snapshots cutting lineage).
+  * pool. No windows, no collects; snapshots cut lineage. The peel runs
+  * under `graft.util.Rounds`, the round driver of connected components
+  * and pivot clustering, so a pool still non-empty after `maxRounds`
+  * rounds throws instead of returning a partial matching.
   */
 object Assignment {
 
@@ -68,8 +69,11 @@ object Assignment {
       .select(col("u"), col("v"), col("best_s").as("score"))
   }
 
-  /** Iterated peel: run [[matchRound]], remove matched nodes from the
-    * pool, repeat until no round matches anything (or `maxRounds`).
+  /** Iterated peel: run [[matchRound]] and remove matched nodes from the
+    * pool until it is empty. Null-score edges leave the pool up front, so
+    * a non-empty pool always has a mutual best pair (its top edge, ties on
+    * the smallest id) and every round matches. Throws IllegalStateException
+    * if the pool is not empty after `maxRounds` rounds.
     * Output: (u, v, score, round) with round = 1-based peel index —
     * matches from later rounds are "second choices" whose best partner
     * was already taken, an audit signal in itself.
@@ -80,35 +84,25 @@ object Assignment {
       snapshot: DataFrame => DataFrame = graft.util.Checkpoints.serializedLocal
   ): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var pool = edges.select(col("u"), col("v"), col("score"))
-    var acc: Option[DataFrame] = None
-    var round = 1
-    var done = false
-    while (round <= maxRounds && !done) {
+    val pool0 = edges.select(col("u"), col("v"), col("score")).where(col("score").isNotNull)
+    // state: (pool, matched pairs so far); from round 1 on, the pool
+    // probe is a limit-1 scan of a checkpoint
+    val (_, acc) = graft.util.Rounds.run("Assignment.matching", maxRounds, (pool0, Option.empty[DataFrame]))(
+      _._1.isEmpty,
+      _._1.count()
+    ) { case ((pool, acc), n) =>
       val m = snapshot(matchRound(pool))
-      if (m.isEmpty) done = true
-      else {
-        val stamped = m.withColumn("round", lit(round))
-        acc = Some(acc.map(_.unionByName(stamped)).getOrElse(stamped))
-        val taken = m.select(col("u").as("n")).unionAll(m.select(col("v").as("n"))).distinct()
-        pool = snapshot(
-          pool
-            .join(taken.select(col("n").as("u")), Seq("u"), "left_anti")
-            .join(taken.select(col("n").as("v")), Seq("v"), "left_anti")
-            .select("u", "v", "score")
-        )
-        if (pool.isEmpty) done = true
-      }
-      round += 1
-    }
-    // truncation is observable: a pool with matchable pairs left at
-    // maxRounds is logged (pool is checkpointed — the probe is one cheap
-    // limit-1 scan), so callers can tell a complete matching from a cut one
-    if (!done && !pool.isEmpty)
-      System.err.println(
-        s"[assignment] matching stopped at maxRounds=$maxRounds with unmatched pairs remaining"
+      val stamped = m.withColumn("round", lit(n + 1))
+      val taken = m.select(col("u").as("n")).unionAll(m.select(col("v").as("n"))).distinct()
+      val rest = snapshot(
+        pool
+          .join(taken.select(col("n").as("u")), Seq("u"), "left_anti")
+          .join(taken.select(col("n").as("v")), Seq("v"), "left_anti")
+          .select("u", "v", "score")
       )
+      (rest, Some(acc.fold(stamped)(_.unionByName(stamped))))
+    }
     // empty matching: caller-typed empty frame (same u/v/score types)
-    acc.getOrElse(edges.select(col("u"), col("v"), col("score")).limit(0).withColumn("round", lit(1)))
+    acc.getOrElse(pool0.limit(0).withColumn("round", lit(1)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -77,14 +77,19 @@ object ConnectedComponents {
       .where(col("src") =!= col("dst"))
       .distinct()
 
-  private def signature(edges: DataFrame): (Long, BigDecimal) = {
-    // decimal(38,0) sum: overflow-proof under ANSI mode (Spark 4 default)
-    val row = edges
-      .agg(
-        count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")), lit(0)).as("h")
-      )
-      .collect()(0)
+  private type Sig = (Long, BigDecimal)
+
+  /** The (count, hash-sum) signature of an edge set, spelled once for the
+    * observed snapshot and the fallback scan. decimal(38,0) sum:
+    * overflow-proof under ANSI mode (Spark 4 default).
+    */
+  private val sigCols: Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    coalesce(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)).as("h")
+  )
+
+  private def signature(edges: DataFrame): Sig = {
+    val row = edges.agg(sigCols.head, sigCols.tail: _*).collect()(0)
     (row.getLong(0), BigDecimal(row.getDecimal(1)))
   }
 
@@ -95,17 +100,9 @@ object ConnectedComponents {
     * drive the observation (defensive — localCheckpoint and parquet writes
     * both do).
     */
-  private def snapshotWithSignature(
-      edges: DataFrame,
-      snapshot: DataFrame => DataFrame
-  ): (DataFrame, (Long, BigDecimal)) = {
+  private def snapshotWithSignature(edges: DataFrame, snapshot: DataFrame => DataFrame): (DataFrame, Sig) = {
     val obs = org.apache.spark.sql.Observation()
-    val observed = edges.observe(
-      obs,
-      count(lit(1)).as("n"),
-      coalesce(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)).as("h")
-    )
-    val out = snapshot(observed)
+    val out = snapshot(edges.observe(obs, sigCols.head, sigCols.tail: _*))
     // the observation listener fires async after the snapshot's action;
     // bounded shared poll (graft.util.Observations), then fall back to the
     // explicit scan if the snapshot impl didn't drive the observation
@@ -169,12 +166,13 @@ object ConnectedComponents {
     * fixpoint, and the fixpoints of a round are exactly the forests of
     * stars each rooted at its component min (Kiveris et al.). The round
     * that confirms the fixpoint costs no extra job: its snapshot carries
-    * the signature. A run still changing after `maxIterations` rounds
-    * throws IllegalStateException with the round count and |E|: the
-    * assignment read off a non-star edge set need not be a function.
+    * the signature. The rounds run under `graft.util.Rounds`, whose cap
+    * rule throws IllegalStateException with the round count and |E| for a
+    * run still changing after `maxIterations` rounds: the assignment read
+    * off a non-star edge set need not be a function.
     *
     * `compactAfter`: mid-run id compaction (see `compactIds`). The
-    * iteration count is unknowable upfront, so the loop switches the LIVE
+    * iteration count is unknowable upfront, so a round switches the LIVE
     * edge set to dense long ids once it has run `compactAfter` rounds
     * without converging: shallow graphs (typical ER blocking output
     * converges in 3-5 rounds) never pay the fixed cost, while deep chains
@@ -202,33 +200,33 @@ object ConnectedComponents {
     val edges0 = edgesIn
       .select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-    var ids: Option[DataFrame] = None
-    var (edges, sig) = snapshotWithSignature(edges0.distinct(), snapshot)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
-      if (iter == compactAfter) {
-        val idMap = compactIds(edges, idSnapshot.getOrElse(graft.util.Checkpoints.serializedLocal))
-        ids = Some(idMap)
-        // the signature hashes id VALUES, so the url-space sig is not
-        // comparable to the nid-space one; reseed convergence from the
-        // remapped set (costs nothing: the next round's sig compares to it)
-        val (remapped, remappedSig) = snapshotWithSignature(mapEdges(edges, idMap), snapshot)
-        edges = remapped
-        sig = remappedSig
-      }
-      val (next, nextSig) = snapshotWithSignature(smallStar(largeStar(edges)), snapshot)
-      converged = nextSig == sig
-      sig = nextSig
-      edges = next
-      iter += 1
+    val (e0, sig0) = snapshotWithSignature(edges0.distinct(), snapshot)
+    val last = graft.util.Rounds.run("connected components", maxIterations, Star(e0, sig0))(
+      s => s.prev.contains(s.sig),
+      _.sig._1
+    ) { (s, n) =>
+      val cur =
+        if (n != compactAfter) s
+        else {
+          val idMap = compactIds(s.edges, idSnapshot.getOrElse(graft.util.Checkpoints.serializedLocal))
+          // the signature hashes id VALUES, so the url-space sig is not
+          // comparable to the nid-space one; reseed convergence from the
+          // remapped set (costs nothing: the next round's sig compares to it)
+          val (remapped, remappedSig) = snapshotWithSignature(mapEdges(s.edges, idMap), snapshot)
+          Star(remapped, remappedSig, Some(idMap))
+        }
+      val (next, nextSig) = snapshotWithSignature(smallStar(largeStar(cur.edges)), snapshot)
+      Star(next, nextSig, cur.ids, Some(cur.sig))
     }
-    if (!converged)
-      throw new IllegalStateException(s"connected components did not converge in $iter rounds (|E| = ${sig._1})")
     // converged edge set is a star forest: (member -> root)
-    val assign = starsToAssignments(edges)
-    ids.fold(assign)(mapAssignmentsBack(assign, _))
+    val assign = starsToAssignments(last.edges)
+    last.ids.fold(assign)(mapAssignmentsBack(assign, _))
   }
+
+  /** `run`'s round state: the live edges and their signature, the
+    * compacted ids map once made, and the signature before the last round.
+    */
+  private final case class Star(edges: DataFrame, sig: Sig, ids: Option[DataFrame] = None, prev: Option[Sig] = None)
 
   private def starsToAssignments(edges: DataFrame): DataFrame = {
     val members = edges.select(col("src").as("url"), col("dst").as("cluster_id"))

@@ -39,7 +39,8 @@ object CorrelationClustering {
   /** Cluster the (src, dst) pair frame; returns (id, pivot) covering every
     * distinct endpoint (isolated-by-peeling nodes become their own pivot,
     * exactly as sequential KwikCluster makes them singleton pivots).
-    * Throws if `maxRounds` is hit with live edges left — with hashed ranks
+    * The rounds run under `graft.util.Rounds`: live edges left after
+    * `maxRounds` rounds throw IllegalStateException — with hashed ranks
     * that means the input violates the contract, not bad luck.
     */
   def pivot(
@@ -58,18 +59,17 @@ object CorrelationClustering {
 
     // live edges: a undecided; b undecided OR a decided pivot (b drops when
     // it clusters, a's whole orientation drops when a decides either way)
-    var live = ed0
-    var pivotsAll = nodes.select(col("id").as("p")).limit(0)
-    var assigned: Vector[DataFrame] = Vector.empty
-    var remaining = live.count()
-    var round = 0
-    while (remaining > 0L && round < maxRounds) {
+    val last = graft.util.Rounds.run(
+      "CorrelationClustering.pivot",
+      maxRounds,
+      Peel(ed0, ed0.count(), nodes.select(col("id").as("p")).limit(0), Vector.empty)
+    )(_.remaining == 0L, _.remaining) { (s, _) =>
       // min-rank live neighbor per undecided node — snapshotted ONCE: four
       // downstream consumers (new pivots, claims, and the two live-set
       // anti-join sides) previously re-evaluated this aggregation per
       // consumer, the round's only full pass over the live edge set
       val mn = snapshot(
-        live
+        s.live
           .groupBy(col("a"))
           .agg(min(struct(xxhash64(col("b")).as("h"), col("b").as("id"))).as("mn"))
           .select(
@@ -82,7 +82,7 @@ object CorrelationClustering {
       // lazy union of checkpointed per-round pivot frames: claims only ever
       // JOINS this set, so re-materializing the growing union every round
       // (the previous shape) bought nothing
-      pivotsAll = pivotsAll.union(newPivots)
+      val pivotsAll = s.pivots.union(newPivots)
       // cluster to the min live neighbor iff it is a (this- or any-earlier-
       // round) pivot; pivots always outrank their claimants, so the two
       // decision sets are disjoint by construction. is_p marks the pivot
@@ -96,32 +96,31 @@ object CorrelationClustering {
           .select(col("p").as("id"), col("p").as("pivot"), lit(true).as("is_p"))
           .union(claims.select(col("id"), col("pivot"), lit(false).as("is_p")))
       )
-      assigned = assigned :+ roundAssign.select(col("id"), col("pivot"))
       val decidedA = roundAssign.select(col("id"))
       val clusteredB = roundAssign.where(!col("is_p")).select(col("id"))
-      live = snapshot(
-        live
-          .join(decidedA, live("a") === decidedA("id"), "left_anti")
-          .join(clusteredB, live("b") === clusteredB("id"), "left_anti")
+      val live = snapshot(
+        s.live
+          .join(decidedA, s.live("a") === decidedA("id"), "left_anti")
+          .join(clusteredB, s.live("b") === clusteredB("id"), "left_anti")
       )
       // NOT an observation ride-along: the terminating round's live set is
       // empty, and the optimizer prunes CollectMetrics on an empty relation
       // so the observation would never fire (full poll budget burned once
       // per call); a count over the just-checkpointed blocks is ~free
-      remaining = live.count()
-      round += 1
+      Peel(live, live.count(), pivotsAll, s.assigned :+ roundAssign.select(col("id"), col("pivot")))
     }
-    if (remaining > 0L)
-      throw new IllegalStateException(
-        s"CorrelationClustering.pivot: $remaining live edges after $maxRounds rounds"
-      )
     val allAssigned =
-      if (assigned.isEmpty) nodes.select(col("id"), col("id").as("pivot")).limit(0)
-      else assigned.reduce(_ union _)
+      if (last.assigned.isEmpty) nodes.select(col("id"), col("id").as("pivot")).limit(0)
+      else last.assigned.reduce(_ union _)
     // peeled-to-isolation nodes: singleton pivots, like sequential KwikCluster
     val singletons = nodes
       .join(allAssigned.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("pivot"))
     allAssigned.union(singletons)
   }
+
+  /** `pivot`'s round state: the live edges and their count, every pivot
+    * so far, and the per-round (id, pivot) frames.
+    */
+  private final case class Peel(live: DataFrame, remaining: Long, pivots: DataFrame, assigned: Vector[DataFrame])
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Normalize
-import graft.functions.SimilarityFunctions.{minhash_sig, simhash64}
+import graft.functions.SimilarityFunctions.simhash64
 
 /** Text-analysis operators for large-scale training-data pipelines: language
   * id (stopword-vote heuristic), quality scoring, token counting,
@@ -195,19 +195,6 @@ object TextAnalysis {
 
   /** 64-bit SimHash fingerprint of the token stream. */
   def fingerprintSimhash(text: Column): Column = simhash64(Normalize.tokensOf(text))
-
-  /** Winnowing fingerprint set (Schleimer et al. 2003, MOSS): distinct
-    * window minima over the k-gram hash stream — guarantees any shared
-    * run of >= windowSize + kGram - 1 tokens yields a shared fingerprint,
-    * and nothing shorter than kGram ever matches. The copy-detection
-    * fingerprint family (vs SimHash's similarity bits). Row-local.
-    */
-  def fingerprintWinnow(text: Column, kGram: Int = 4, windowSize: Int = 5): Column =
-    graft.functions.SimilarityFunctions.winnow(Normalize.tokensOf(text), kGram, windowSize)
-
-  /** Rolling-shingle MinHash fingerprint (first slot of a k=4 signature). */
-  def fingerprintMinhash(text: Column, shingle: Int = 4): Column =
-    element_at(minhash_sig(Normalize.shingles(Normalize.tokensOf(text), shingle), 4), 1)
 
   /** Main-content extraction from the north-rule `html:binary` column —
     * the step that produces the pipeline's `text` (per-row invariant:

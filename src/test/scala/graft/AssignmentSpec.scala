@@ -77,4 +77,46 @@ class AssignmentSpec extends SparkSpec {
     val empty = Assignment.matching(edges.limit(0))
     assert(empty.columns.toSeq === Seq("u", "v", "score", "round") && empty.count() === 0)
   }
+
+  /** Sequential global greedy matching: edges by descending score, taken
+    * when both ends are still free. Returns canonical (u < v, score) pairs.
+    */
+  private def greedy(edges: Seq[(String, String, Double)]): Set[(String, String, Double)] = {
+    val used = scala.collection.mutable.Set.empty[String]
+    edges.sortBy(-_._3).collect {
+      case (a, b, s) if !used(a) && !used(b) =>
+        used += a += b
+        if (a < b) (a, b, s) else (b, a, s)
+    }.toSet
+  }
+
+  private def peel(edges: Seq[(String, String, Double)], maxRounds: Int): Seq[(String, String, Double, Int)] =
+    Assignment
+      .matching(edges.toDF("u", "v", "score"), maxRounds)
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3)))
+      .toSeq
+
+  test("label-permuted paths, trees and stars with distinct scores: the peel equals global greedy") {
+    val rng = new scala.util.Random(61)
+    val cases = GraphShapes.shapes.map { es =>
+      val scores = rng.shuffle((1 to es.size).toVector).map(_.toDouble / (es.size + 1))
+      es.zip(scores).map { case ((a, b), s) => (a, b, s) }
+    }
+    GraphShapes.eachConcurrently(cases) { es =>
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.size
+      val got = peel(es, maxRounds = nodes)
+      assert(got.map(m => (m._1, m._2, m._3)).toSet === greedy(es), s"on $es")
+    }
+  }
+
+  test("a 20-node chain with decreasing scores peels in 10 rounds and throws at the default cap of 8") {
+    // one pair per round: each next pair's best partner was the one just taken
+    val chain = (0 until 19).map(i => (f"c$i%02d", f"c${i + 1}%02d", 1.0 - i / 100.0))
+    val full = peel(chain, maxRounds = 10)
+    assert(full.map(_._4).sorted === (1 to 10))
+    assert(full.map(m => (m._1, m._2, m._3)).toSet === greedy(chain))
+    val e = intercept[IllegalStateException](Assignment.matching(chain.toDF("u", "v", "score")))
+    assert(e.getMessage.contains("8 rounds") && e.getMessage.contains("|E| = 3"), e.getMessage)
+  }
 }

@@ -1,27 +1,25 @@
 package graft
 
 import graft.operators.Canopy
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 class CanopySpec extends SparkSpec {
   import spark.implicits._
 
-  /** Sequential canopy construction in rank order — the KDD 2000 loop. */
-  private def sequential(
-      nodes: Seq[Long],
-      t1: Seq[(Long, Long)],
-      t2: Seq[(Long, Long)]
-  ): Set[(Long, Long)] = {
-    val rank: Map[Long, (Long, Long)] = nodes
+  /** Sequential canopy construction in rank order — the KDD 2000 loop.
+    * Rank is (xxhash64(id), id), as `pivot` ranks nodes.
+    */
+  private def sequential[T: Encoder: Ordering](nodes: Seq[T], t1: Seq[(T, T)], t2: Seq[(T, T)]): Set[(T, T)] = {
+    val hash: Map[T, Long] = nodes
       .toDF("id")
-      .select(col("id"), xxhash64(col("id")).as("h"))
-      .as[(Long, Long)]
+      .select(col("id"), xxhash64(col("id")))
       .collect()
-      .map { case (id, h) => id -> ((h, id)) }
+      .map(r => r.getAs[T](0) -> r.getLong(1))
       .toMap
-    def adj(edges: Seq[(Long, Long)]): Map[Long, Set[Long]] = {
-      val m = mutable.Map.empty[Long, mutable.Set[Long]]
+    def adj(edges: Seq[(T, T)]): Map[T, Set[T]] = {
+      val m = mutable.Map.empty[T, mutable.Set[T]]
       edges.foreach { case (a, b) =>
         if (a != b) {
           m.getOrElseUpdate(a, mutable.Set.empty) += b
@@ -32,9 +30,8 @@ class CanopySpec extends SparkSpec {
     }
     val a1 = adj(t1)
     val a2 = adj(t2)
-    implicit val ord: Ordering[(Long, Long)] = Ordering.Tuple2(Ordering.Long, Ordering.Long)
-    val candidates = mutable.LinkedHashSet(nodes.sortBy(rank): _*)
-    val out = mutable.Set.empty[(Long, Long)]
+    val candidates = mutable.LinkedHashSet(nodes.sortBy(v => (hash(v), v)): _*)
+    val out = mutable.Set.empty[(T, T)]
     while (candidates.nonEmpty) {
       val c = candidates.head
       out += ((c, c))
@@ -46,16 +43,18 @@ class CanopySpec extends SparkSpec {
     out.toSet
   }
 
-  private def parallel(
-      nodes: Seq[Long],
-      t1: Seq[(Long, Long)],
-      t2: Seq[(Long, Long)]
-  ): Set[(Long, Long)] =
+  private def parallel[T: Encoder](nodes: Seq[T], t1: Seq[(T, T)], t2: Seq[(T, T)]): Set[(T, T)] = {
+    val pairs = Encoders.tuple(implicitly[Encoder[T]], implicitly[Encoder[T]])
     Canopy
-      .canopies(nodes.toDF("id"), t1.toDF("src", "dst"), t2.toDF("src", "dst"))
-      .as[(Long, Long)]
+      .canopies(
+        nodes.toDF("id"),
+        spark.createDataset(t1)(pairs).toDF("src", "dst"),
+        spark.createDataset(t2)(pairs).toDF("src", "dst")
+      )
       .collect()
+      .map(r => r.getAs[T](0) -> r.getAs[T](1))
       .toSet
+  }
 
   test("hand case: overlapping canopies, tight removal, isolated center") {
     val nodes = (1L to 6L)
@@ -87,5 +86,14 @@ class CanopySpec extends SparkSpec {
     } yield (a, b)
     val got = parallel(nodes, t1, t1)
     assert(nodes.toSet === got.map(_._1).toSet)
+  }
+
+  test("label-permuted paths, trees and stars: T1 = the shape, T2 = a seeded subset, parallel equals sequential") {
+    val rng = new scala.util.Random(67)
+    val cases = GraphShapes.shapes.map(t1 => (t1, t1.filter(_ => rng.nextBoolean())))
+    GraphShapes.eachConcurrently(cases) { case (t1, t2) =>
+      val nodes = t1.flatMap(e => Seq(e._1, e._2)).distinct
+      assert(parallel(nodes, t1, t2) === sequential(nodes, t1, t2), s"on T1 = $t1, T2 = $t2")
+    }
   }
 }

@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
-
+import graft.GraphShapes._
 import graft.io.ParquetTableIO
 import graft.operators.ConnectedComponents
 import graft.util.Checkpoints
@@ -131,45 +129,8 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(auto.size == 700)
   }
 
-  // --- adversarial oracle: sparse, label-permuted components, each run
-  // ALONE. Batched with other components, an exit test over the whole
-  // edge set rarely fires while some component is still shrinking, which
-  // hides an unsound exit; an isolated small component exposes it.
-
-  /** `n` node labels in random order: the label order (which decides the
-    * component min and every star round's min-link) is unrelated to the
-    * graph's shape.
-    */
-  private def permutedLabels(n: Int): Gen[Vector[String]] =
-    Gen.listOfN(n, Gen.long).map(keys => (0 until n).map(i => f"n$i%02d").zip(keys).sortBy(_._2).map(_._1).toVector)
-
-  /** Randomly oriented edge. */
-  private def oriented(a: String, b: String): Gen[(String, String)] = Gen.oneOf((a, b), (b, a))
-
-  private val path: Gen[Seq[(String, String)]] = for {
-    n <- Gen.choose(4, 10)
-    ls <- permutedLabels(n)
-    es <- Gen.sequence[Seq[(String, String)], (String, String)](ls.sliding(2).map(p => oriented(p(0), p(1))).toSeq)
-  } yield es
-
-  /** Random recursive tree: node i attaches to a uniform earlier node. */
-  private val tree: Gen[Seq[(String, String)]] = for {
-    n <- Gen.choose(4, 30)
-    ls <- permutedLabels(n)
-    parents <- Gen.sequence[Seq[Int], Int]((1 until n).map(i => Gen.choose(0, i - 1)))
-    es <- Gen.sequence[Seq[(String, String)], (String, String)](
-      parents.zipWithIndex.map { case (p, i) => oriented(ls(p), ls(i + 1)) }
-    )
-  } yield es
-
-  private val star: Gen[Seq[(String, String)]] = for {
-    n <- Gen.choose(5, 40)
-    ls <- permutedLabels(n)
-    es <- Gen.sequence[Seq[(String, String)], (String, String)](ls.tail.map(oriented(ls.head, _)))
-  } yield es
-
-  private def samples(gen: Gen[Seq[(String, String)]], n: Int, seed: Long): Seq[Seq[(String, String)]] =
-    (0 until n).map(i => gen.pureApply(Gen.Parameters.default, Seed(seed + i)))
+  // --- adversarial oracle: the label-permuted shapes of GraphShapes, each
+  // run alone
 
   /** The four CC paths: plain, mid-run compaction, mid-run compaction over
     * rotating durable checkpoints with a non-rotating ids map, and the
@@ -205,31 +166,8 @@ class ConnectedComponentsSpec extends SparkSpec {
     assertMatchesOracle(Seq(("a", "d"), ("d", "e"), ("e", "f"), ("f", "b")))
   }
 
-  /** Each component is still its own CC call; only the job-scheduling waits
-    * of different calls overlap.
-    */
-  private def eachConcurrently(components: Seq[Seq[(String, String)]]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.traverse(components)(c => Future(assertMatchesOracle(c))), scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
-  }
-
   test("label-permuted paths, trees and stars, each alone, match the oracle through every CC path") {
-    eachConcurrently(samples(path, 12, 100L) ++ samples(tree, 4, 200L) ++ samples(star, 4, 300L))
-  }
-
-  /** `leaves` leaves on each side of `hub` in label order, randomly
-    * oriented: the hub is the min neighbour of the upper leaves and
-    * collects one row per neighbour in both stars.
-    */
-  private def hubStar(prefix: String, leaves: Int, rng: scala.util.Random): Seq[(String, String)] = {
-    val hub = f"$prefix$leaves%05d"
-    (0 to 2 * leaves).filter(_ != leaves).map { i =>
-      val leaf = f"$prefix$i%05d"
-      if (rng.nextBoolean()) (hub, leaf) else (leaf, hub)
-    }
+    eachConcurrently(shapes)(assertMatchesOracle)
   }
 
   test("a hub labelled mid-range with 2k leaves on each side matches the oracle through every CC path") {
@@ -237,12 +175,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("two mid-range hubs bridged by a label-permuted 6-node path match the oracle through every CC path") {
-    val rng = new scala.util.Random(43)
-    // bridge labels spread over (and below) the hubs' label range, so the
-    // component min sits inside the path, away from either hub
-    val bridge = rng.shuffle(Seq("m9999", "n00500b", "n03000b", "o01000b", "o03500b", "p0000"))
-    val path = ("n02000" +: bridge :+ "o02000").sliding(2).map(p => (p(0), p(1))).toSeq
-    assertMatchesOracle(hubStar("n", 2000, rng) ++ hubStar("o", 2000, rng) ++ path)
+    assertMatchesOracle(twoHubBridge(43))
   }
 
   test("a run that does not converge within maxIterations throws instead of returning a partial assignment") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.CorrelationClustering
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -8,28 +9,27 @@ class CorrelationClusteringSpec extends SparkSpec {
   import spark.implicits._
 
   /** Sequential KwikCluster in rank order — the published algorithm the
-    * parallel peeling must reproduce exactly (CDK14 Lemma 1).
+    * parallel peeling must reproduce exactly (CDK14 Lemma 1). Rank is
+    * (xxhash64(id), id), as `pivot` ranks nodes.
     */
-  private def sequential(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  private def sequential[T: Encoder: Ordering](edges: Seq[(T, T)]): Map[T, T] = {
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    val rank: Map[Long, (Long, Long)] =
+    val hash: Map[T, Long] =
       nodes
         .toDF("id")
-        .select(col("id"), xxhash64(col("id")).as("h"))
-        .as[(Long, Long)]
+        .select(col("id"), xxhash64(col("id")))
         .collect()
-        .map { case (id, h) => id -> ((h, id)) }
+        .map(r => r.getAs[T](0) -> r.getLong(1))
         .toMap
-    val adj = mutable.Map.empty[Long, mutable.Set[Long]]
+    val adj = mutable.Map.empty[T, mutable.Set[T]]
     edges.foreach { case (a, b) =>
       if (a != b) {
         adj.getOrElseUpdate(a, mutable.Set.empty) += b
         adj.getOrElseUpdate(b, mutable.Set.empty) += a
       }
     }
-    val assign = mutable.Map.empty[Long, Long]
-    implicit val ord: Ordering[(Long, Long)] = Ordering.Tuple2(Ordering.Long, Ordering.Long)
-    for (v <- nodes.sortBy(rank) if !assign.contains(v)) {
+    val assign = mutable.Map.empty[T, T]
+    for (v <- nodes.sortBy(v => (hash(v), v)) if !assign.contains(v)) {
       assign(v) = v
       adj.getOrElse(v, mutable.Set.empty).foreach { u =>
         if (!assign.contains(u)) assign(u) = v
@@ -38,11 +38,11 @@ class CorrelationClusteringSpec extends SparkSpec {
     assign.toMap
   }
 
-  private def parallel(edges: Seq[(Long, Long)]): Map[Long, Long] =
+  private def parallel[T: Encoder](edges: Seq[(T, T)]): Map[T, T] =
     CorrelationClustering
-      .pivot(edges.toDF("src", "dst"))
-      .as[(Long, Long)]
+      .pivot(spark.createDataset(edges)(Encoders.tuple(implicitly[Encoder[T]], implicitly[Encoder[T]])).toDF("src", "dst"))
       .collect()
+      .map(r => r.getAs[T](0) -> r.getAs[T](1))
       .toMap
 
   test("path graph: parallel peeling equals sequential KwikCluster") {
@@ -79,5 +79,14 @@ class CorrelationClusteringSpec extends SparkSpec {
     val got = parallel(edges)
     assert(got.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L))
     assert(got === sequential(edges.filter(e => e._1 != e._2)))
+  }
+
+  test("label-permuted paths, trees and stars, each alone, equal sequential KwikCluster") {
+    GraphShapes.eachConcurrently(GraphShapes.shapes)(es => assert(parallel(es) === sequential(es), s"on $es"))
+  }
+
+  test("two mid-range hubs bridged by a label-permuted path equal sequential KwikCluster") {
+    val edges = GraphShapes.twoHubBridge(43)
+    assert(parallel(edges) === sequential(edges))
   }
 }

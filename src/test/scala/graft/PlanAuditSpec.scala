@@ -180,20 +180,39 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("Join") && !plan.contains("SortAggregate"), plan)
   }
 
-  test("CC job budget: a seeded 2k-node graph of label-permuted paths runs in at most 20 Spark jobs") {
+  /** A seeded 2k-node graph: 250 paths of 8 nodes each; the shuffled
+    * labels decide every star's min and every pivot rank.
+    */
+  private def labelPermutedPaths = {
     import spark.implicits._
     val rng = new scala.util.Random(53)
     val labels = rng.shuffle((0 until 2000).map(i => f"n$i%04d")).toVector
-    // 250 paths of 8 nodes each; the shuffled labels decide every star's min
-    val edges = labels.grouped(8).flatMap(_.sliding(2).map(p => (p(0), p(1)))).toSeq.toDF("src", "dst")
+    labels.grouped(8).flatMap(_.sliding(2).map(p => (p(0), p(1)))).toSeq.toDF("src", "dst")
+  }
+
+  /** Every Spark job `body` runs. */
+  private def jobsOf(body: => Unit): Seq[graft.util.JobLedger.Job] = {
     val ledger = graft.util.JobLedger.install(spark.sparkContext)
-    val jobs =
-      try {
-        val out = graft.operators.ConnectedComponents.run(edges).collect()
-        assert(out.length == 2000 && out.map(_.getString(0)).distinct.length == 2000)
-        ledger.snapshot().jobs
-      } finally ledger.remove()
+    try { body; ledger.snapshot().jobs }
+    finally ledger.remove()
+  }
+
+  test("CC job budget: a seeded 2k-node graph of label-permuted paths runs in at most 20 Spark jobs") {
+    val jobs = jobsOf {
+      val out = graft.operators.ConnectedComponents.run(labelPermutedPaths).collect()
+      assert(out.length == 2000 && out.map(_.getString(0)).distinct.length == 2000)
+    }
     assert(jobs.size <= 20, jobs.map(j => s"${j.id} ${j.site}").mkString("\n"))
+  }
+
+  test("pivot job budget: the same 2k-node graph clusters in at most 46 Spark jobs") {
+    // no slack: 46 is the measured count, so a job the round driver
+    // adds per call or per round fails here
+    val jobs = jobsOf {
+      val out = graft.operators.CorrelationClustering.pivot(labelPermutedPaths).collect()
+      assert(out.length == 2000 && out.map(_.getString(0)).distinct.length == 2000)
+    }
+    assert(jobs.size <= 46, jobs.map(j => s"${j.id} ${j.site}").mkString("\n"))
   }
 
   test("a seq pass runs its running sum without a hash exchange on _pid") {
@@ -217,12 +236,7 @@ class PlanAuditSpec extends SparkSpec {
     graft.synth.WebCorpus.pages(spark, graft.synth.WebCorpus.Config(numClusters = 60, seed = 3L)).toDF()
       .write.parquet(src)
     val pages = spark.read.parquet(src)
-    val ledger = graft.util.JobLedger.install(spark.sparkContext)
-    val jobs =
-      try {
-        graft.pipeline.LinkagePipeline.run(pages).collect()
-        ledger.snapshot().jobs.filter(_.phase == "block+score")
-      } finally ledger.remove()
+    val jobs = jobsOf(graft.pipeline.LinkagePipeline.run(pages).collect()).filter(_.phase == "block+score")
     assert(jobs.size <= 11, jobs.map(j => s"${j.id} ${j.site}").mkString("\n"))
   }
 }
