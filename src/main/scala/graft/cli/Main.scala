@@ -461,8 +461,8 @@ object Main {
       if (opts.get("save-index").contains("true") && !opts.contains("base") && !opts.get("dry-run").contains("true"))
         IncrementalLinkage.saveIndex(IncrementalLinkage.buildIndex(pages, cfg), s"$output.index", strategyNames)
       val secs = (System.nanoTime() - t0) / 1e9
-      // run() leaves graft:sink set on this thread; the reporting jobs
-      // below are not part of the timed region
+      // run() and runResumable() leave graft:sink set on this thread; the
+      // reporting jobs below are not part of the timed region
       spark.sparkContext.clearJobGroup()
       val monitored = ledger.map(_.snapshot())
 

@@ -675,16 +675,18 @@ object IncrementalLinkage {
       cfg: LinkagePipeline.Config,
       tag: String
   ): Relinked = {
-    def snapshot(root: String, keepLast: Int): DataFrame => DataFrame =
-      cfg.checkpointDir
-        .map(d => graft.util.Checkpoints.reliable(s"$d/$tag-$root", keepLast))
-        .getOrElse(graft.util.Checkpoints.serializedLocal)
     val (feats, releaseFeats) = PairScorer.featuresWithIdf(scoreCorpus, idfParts)
     val scored = PairScorer.score(pairs, feats, cfg.weights)
-    val accepted = snapshot("accepted", 0)(PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds))
+    val accepted = LinkagePipeline.checkpointRoot(cfg, s"$tag-accepted")(
+      PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds)
+    )
     releaseFeats()
-    val Clusters(comp, mergeMap) =
-      contractAndCluster(accepted, contractTo(accepted), cfg.maxCcIterations, snapshot("cc", 2))
+    val Clusters(comp, mergeMap) = contractAndCluster(
+      accepted,
+      contractTo(accepted),
+      cfg.maxCcIterations,
+      LinkagePipeline.checkpointRoot(cfg, s"$tag-cc", keepLast = 2)
+    )
     // the merge map is read by every downstream join AND returned; it is
     // tiny (affected clusters only) — materialize once
     Relinked(comp, graft.util.Checkpoints.serializedLocal(mergeMap), LinkagePipeline.bestScores(accepted))

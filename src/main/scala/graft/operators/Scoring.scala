@@ -22,15 +22,6 @@ object PairScorer {
       threshold: Double = 0.70
   )
 
-  /** Per-document similarity features. Computed ONCE per document (linear
-    * scan + one shuffle for the IDF join), so the quadratic pair stage only
-    * does cheap kernel math — never re-tokenizes per pair.
-    *
-    * Output: url, title_norm (first 10 tokens), text_cap (first 120 chars
-    * of ws-normalized text — see the cost note at the cap), tfidf
-    * (struct<ts:array<long>, ws:array<double>> parallel primitive arrays
-    * sorted by ts, L2-normalized — SparseVec's layout).
-    */
   /** Hashed-bucket dimensionality: bounds the IDF table to a broadcastable
     * size at ANY corpus scale (feature-hashing trick; 2^18 buckets = at
     * most ~4 MB of (t, idf) pairs).
@@ -55,33 +46,11 @@ object PairScorer {
   def idfArtifact(pages: DataFrame): (DataFrame, Long) = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val toks = Normalize.tokensOf(col("text"))
-    val tf = pages.select(SimilarityFunctions.term_freqs(toks, TfBuckets).as("tf"))
-    // one action: the doc count rides the df aggregation as an observation
-    // (attached before the explode), so the corpus is scanned exactly once
-    // and the pass needs no persist at all
-    val obs = org.apache.spark.sql.Observation()
-    val rows = tf
-      .observe(obs, count(lit(1)).as("n_docs"))
-      .select(explode(col("tf.ts")).as("t"))
-      .groupBy("t")
-      .agg(count(lit(1)).as("df"))
-      .collect() // bounded by TfBuckets
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .toSeq
-    // zero buckets -> the corpus was empty or all-blank, and on an empty
-    // relation the optimizer prunes the CollectMetrics node so the
-    // observation NEVER fires: skip the poll and count the (empty) frame
-    // directly instead of burning the full poll budget
-    val nDocs =
-      if (rows.isEmpty) tf.count()
-      else
-        graft.util.Observations
-          .getWithin(obs)
-          .get("n_docs")
-          .map(_.asInstanceOf[Long])
-          .getOrElse(tf.count())
-    (rows.toDF("t", "df"), nDocs)
+    // a bare term_freqs projection: the pass needs no persist at all
+    val (dfs, nDocs) = documentFrequencies(
+      pages.select(SimilarityFunctions.term_freqs(Normalize.tokensOf(col("text")), TfBuckets).as("tf"))
+    )
+    (dfs.toSeq.toDF("t", "df"), nDocs)
   }
 
   /** Features against a FIXED IDF built from one or more artifacts (summed
@@ -92,17 +61,69 @@ object PairScorer {
     */
   def featuresWithIdf(pages: DataFrame, parts: Seq[(DataFrame, Long)]): (DataFrame, () => Unit) = {
     require(parts.nonEmpty, "featuresWithIdf: at least one IDF artifact")
-    val nDocs = parts.map(_._2).sum.toDouble
-    val dfSum = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-    parts.foreach { case (dfFrame, _) =>
-      dfFrame.select(col("t").cast("long"), col("df").cast("long")).collect().foreach { r =>
-        dfSum.merge(r.getLong(0), r.getLong(1), (a, b) => a + b)
+    val dfs = parts
+      .flatMap { case (dfFrame, _) =>
+        dfFrame.select(col("t").cast("long"), col("df").cast("long")).collect().map(r => r.getLong(0) -> r.getLong(1))
       }
-    }
-    val idfMap = new java.util.HashMap[java.lang.Long, java.lang.Double](dfSum.size() * 2)
-    dfSum.forEach((t, df) => idfMap.put(t, math.log((nDocs + 1.0) / (df.doubleValue() + 1.0)) + 1.0))
+      .groupMapReduce(_._1)(_._2)(_ + _)
     val base = tokenized(pages)
-    (weightedSelect(base, pages.sparkSession.sparkContext.broadcast(idfMap)), () => { base.unpersist(false); () })
+    (weighted(base, dfs, parts.map(_._2).sum), () => { base.unpersist(false); () })
+  }
+
+  /** Per-document similarity features over the corpus's own IDF, plus a
+    * release handle that unpersists the internal tokenize+hash cache — call
+    * it once the downstream consumer (the pair join) has materialized, or
+    * each run keeps one cached corpus copy until LRU eviction. Computed
+    * ONCE per document, so the quadratic pair stage only does cheap kernel
+    * math — never re-tokenizes per pair.
+    *
+    * Output: url, title_norm (first 10 tokens), text_cap (first 120 chars
+    * of ws-normalized text — see the cost note at the cap), tfidf
+    * (struct<ts:array<long>, ws:array<double>> parallel primitive arrays
+    * sorted by ts, L2-normalized — SparseVec's layout). Equal row for row
+    * to `featuresWithIdf(pages, Seq(idfArtifact(pages)))`.
+    */
+  def featuresWithRelease(pages: DataFrame): (DataFrame, () => Unit) = {
+    // persisted (see tokenized): this pass (tokenize + hash every document)
+    // is read three times — the IDF aggregation plus BOTH sides of the
+    // pair-scoring join — and recomputing it dominates CPU at scale.
+    // Serialized + rdd.compress keeps the cached bytes a fraction of the
+    // raw text; eviction is LRU. The IDF aggregation's map stage is what
+    // materializes the cache.
+    val base = tokenized(pages)
+    val (dfs, nDocs) = documentFrequencies(base)
+    (weighted(base, dfs, nDocs), () => { base.unpersist(false); () })
+  }
+
+  /** Hashed-bucket document frequencies (t, df) of a frame with a `tf`
+    * column, plus its document count, in ONE action: the count rides the
+    * df aggregation as an observation attached BEFORE the explode, so each
+    * doc is counted once and no separate pass pays for the row count. df
+    * counts DOCUMENTS per bucket (tf entries are already distinct per doc);
+    * the output is bounded by [[TfBuckets]], so it is collected.
+    */
+  private def documentFrequencies(tf: DataFrame): (Array[(Long, Long)], Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val dfs = tf
+      .observe(obs, count(lit(1)).as("n_docs"))
+      .select(explode(col("tf.ts")).as("t"))
+      .groupBy("t")
+      .agg(count(lit(1)).as("df"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    // zero buckets -> the corpus was empty or all-blank, and on an empty
+    // relation the optimizer prunes the CollectMetrics node so the
+    // observation NEVER fires: skip the poll and count the (empty) frame
+    // directly instead of burning the full poll budget
+    val nDocs =
+      if (dfs.isEmpty) tf.count()
+      else
+        graft.util.Observations
+          .getWithin(obs)
+          .get("n_docs")
+          .map(_.asInstanceOf[Long])
+          .getOrElse(tf.count())
+    (dfs, nDocs)
   }
 
   /** The shared tokenize+hash pass (persisted: read by the IDF aggregation
@@ -123,66 +144,21 @@ object PairScorer {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
   }
 
-  private def weightedSelect(
-      base: DataFrame,
-      idfBc: org.apache.spark.broadcast.Broadcast[java.util.HashMap[java.lang.Long, java.lang.Double]]
-  ): DataFrame =
+  /** `base`'s features, tf weighted by idf = log((n+1)/(df+1))+1 over the
+    * bucket document frequencies `dfs` of an n-document corpus. The idf map
+    * is broadcast and applied in-row with the L2 normalization: the
+    * document side of the features has NO full-corpus shuffle at all.
+    */
+  private def weighted(base: DataFrame, dfs: Iterable[(Long, Long)], nDocs: Long): DataFrame = {
+    val idf = new java.util.HashMap[java.lang.Long, java.lang.Double](dfs.size * 2)
+    dfs.foreach { case (t, df) => idf.put(t, math.log((nDocs + 1.0) / (df + 1.0)) + 1.0) }
+    val idfBc = base.sparkSession.sparkContext.broadcast(idf)
     base.select(
       col("url"),
       col("title_norm"),
       col("text_cap"),
       SimilarityFunctions.tfidf_weight(col("tf"), idfBc).as("tfidf")
     )
-
-  /** `features` plus a release handle that unpersists the internal
-    * tokenize+hash cache — call it once the downstream consumer (the pair
-    * join) has materialized, or each run keeps one cached corpus copy
-    * until LRU eviction.
-    */
-  def featuresWithRelease(pages: DataFrame): (DataFrame, () => Unit) = {
-    // persisted (see tokenized): this pass (tokenize + hash every document)
-    // is read three times — the IDF aggregation plus BOTH sides of the
-    // pair-scoring join — and recomputing it dominates CPU at scale.
-    // Serialized + rdd.compress keeps the cached bytes a fraction of the
-    // raw text; eviction is LRU.
-    val base = tokenized(pages)
-
-    // corpus IDF over hashed buckets: the only wide dependency, and its
-    // output is bounded by TfBuckets -> collected + broadcast. df counts
-    // DOCUMENTS per bucket (tf entries are already distinct per doc).
-    val spark = pages.sparkSession
-    // ONE action builds the whole artifact set: the IDF aggregation's map
-    // stage materializes the tokenize+hash cache, and the document count
-    // rides the same job as an observation (attached BEFORE the explode, so
-    // each doc is counted once) — previously a separate base.count() paid a
-    // full extra pass over the cached corpus just for the row count
-    val obs = org.apache.spark.sql.Observation()
-    val idfRows = base
-      .observe(obs, count(lit(1)).as("n_docs"))
-      .select(explode(col("tf.ts")).as("t"))
-      .groupBy(col("t"))
-      .agg(count(lit(1)).cast("double").as("df"))
-      .collect()
-    // zero buckets -> empty/all-blank corpus; the optimizer prunes the
-    // CollectMetrics node on an empty relation so the observation never
-    // fires — count the cached (empty) frame directly, no poll budget spent
-    val nDocs =
-      if (idfRows.isEmpty) base.count().toDouble
-      else
-        graft.util.Observations
-          .getWithin(obs)
-          .get("n_docs")
-          .map(_.asInstanceOf[Long].toDouble)
-          .getOrElse(base.count().toDouble) // defensive fallback; cache is hot
-    val idfMap = new java.util.HashMap[java.lang.Long, java.lang.Double](idfRows.length * 2)
-    idfRows.foreach { r =>
-      idfMap.put(r.getLong(0), math.log((nDocs + 1.0) / (r.getDouble(1) + 1.0)) + 1.0)
-    }
-    val idfBc = spark.sparkContext.broadcast(idfMap)
-
-    // weighting + L2 normalization happen in-row against the broadcast map:
-    // the document side of features() has NO full-corpus shuffle at all
-    (weightedSelect(base, idfBc), () => { base.unpersist(false); () })
   }
 
   /** Score candidate pairs. `pairs`: (urlA, urlB, key); `feats`: output of
@@ -253,8 +229,4 @@ object PairScorer {
           .where(col("score") >= coalesce(col("_th"), lit(w.threshold)))
           .drop("_bk", "_th")
     }
-
-  /** Threshold scored pairs into match edges (below threshold = NIL analog). */
-  def edges(scored: DataFrame, w: Weights = Weights()): DataFrame =
-    threshold(scored, w).select(col("urlA").as("src"), col("urlB").as("dst"))
 }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -18,6 +17,14 @@ import graft.util.{Checkpoints, DeterministicSeq}
   * (/root/reference/lion_linker/lion_linker.py:1334-1410) collapses into one
   * declarative plan; the only driver-side loop is the bounded, checkpointed
   * CC iteration.
+  *
+  * The DAG is written once. `run` and `runResumable` differ only in a
+  * stage policy that decides where each stage (keys, pairs, accepted, CC,
+  * predictions) materializes: in memory, where everything but the
+  * accepted edge set and CC's rounds stays lazy, or committed, where each
+  * stage is read back from its TableIO snapshot when one is valid and
+  * committed otherwise. Both ingest the input the same way and run every
+  * job under the same `graft:<phase>` job groups.
   */
 object LinkagePipeline {
 
@@ -35,15 +42,16 @@ object LinkagePipeline {
         * `weights.threshold` is the fallback.
         */
       perKeyThresholds: Option[DataFrame] = None,
-      /** Durable checkpoint root for the edge set + CC iterations. Unset
-        * (small/interactive runs): fast serialized localCheckpoint, NOT
-        * executor-loss-safe. Set (the large-run default on a real cluster):
-        * every iteration persists to this dir (hdfs://, s3a://, ...) and
-        * survives executor loss — the lighter sibling of the fully
-        * resumable `runResumable` snapshots. CC iterations rotate
-        * keep-last-2 under `cc/`; the ids map of a deep graph's mid-run
-        * compaction (ConnectedComponents.run `compactAfter`) keeps its own
-        * non-rotating root `cc-ids/`.
+      /** Durable checkpoint root for `run`'s accepted edge set + CC
+        * iterations (see [[checkpointRoot]]). Unset (small/interactive
+        * runs): fast serialized localCheckpoint, NOT executor-loss-safe.
+        * Set (the large-run default on a real cluster): every iteration
+        * persists to this dir (hdfs://, s3a://, ...) and survives executor
+        * loss — the lighter sibling of `runResumable`'s committed stages,
+        * which ignore it. The accepted edges keep every checkpoint under
+        * `accepted/`; CC iterations rotate keep-last-2 under `cc/`; the ids
+        * map of a deep graph's mid-run compaction (ConnectedComponents.run
+        * `compactAfter`) keeps its own non-rotating root `cc-ids/`.
         */
       checkpointDir: Option[String] = None,
       /** Sorted-neighborhood passes: (sort-key SQL expression over the
@@ -119,8 +127,25 @@ object LinkagePipeline {
     * `score` = the best accepted pair score touching the url (null for
     * singletons); `status` = linked/nil; `seq` = deterministic total order
     * (reference W5); `text` = untouched input text (per-row invariant).
+    *
+    * The flagship DAG under the in-memory stage policy: keys, pairs and
+    * the predictions stay lazy, the accepted edge set materializes once
+    * through [[checkpointRoot]], and CC snapshots its rounds there too.
     */
-  def run(pages: DataFrame, cfg: Config = Config()): DataFrame = {
+  def run(pages: DataFrame, cfg: Config = Config()): DataFrame = flagship(pages, cfg, new InMemory(cfg))
+
+  /** Resumable `run`: the same DAG under the committing stage policy. Every
+    * stage (keys -> pairs -> accepted -> cc_iter_* -> predictions) is read
+    * back when `io` holds a valid manifest for it, else computed and
+    * committed as a Parquet snapshot + manifest carrying its in-flight
+    * `observe()` counters; a restarted run with the same config hash thus
+    * resumes from the last committed stage (SURVEY.md §4.3).
+    */
+  def runResumable(pages: DataFrame, cfg: Config, io: graft.io.TableIO): DataFrame =
+    flagship(pages, cfg, new Committed(cfg, io, pages.sparkSession))
+
+  /** The one flagship DAG; `stages` decides where each stage materializes. */
+  private def flagship(pages: DataFrame, cfg: Config, stages: StagePolicy): DataFrame = {
     // The corpus is scanned by every blocking strategy, the feature pass and
     // the final merge. When the input is a plain columnar scan, re-scanning
     // the (url, text)-pruned source is the scale-safe choice — persisting
@@ -148,36 +173,34 @@ object LinkagePipeline {
       }
 
     phase("block+score")
-    val keys = Blocker.allKeys(corpus, cfg.strategies)
-    val pairs = candidatePairs(corpus, keys, cfg)
-    val (feats, releaseFeats) = PairScorer.featuresWithRelease(corpus)
-    val scored = PairScorer.score(pairs, feats, cfg.weights)
-    val accepted = PairScorer.threshold(scored, cfg.weights, cfg.perKeyThresholds)
-
-    // scoring + CC reuse the accepted edge set: materialize it once
-    // (durable checkpoint when a dir is configured, else serialized local).
-    // Separate roots: the accepted checkpoint is re-read AFTER CC (bestScore)
-    // so it must survive the whole run; CC iterations only ever read the
-    // latest frame and rotate keep-last-2 to bound durable storage.
-    val edgeSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir.map(d => Checkpoints.reliable(s"$d/accepted")).getOrElse(Checkpoints.serializedLocal)
-    val ccSnapshot: DataFrame => DataFrame =
-      cfg.checkpointDir.map(d => Checkpoints.reliable(s"$d/cc", keepLast = 2)).getOrElse(Checkpoints.serializedLocal)
-    val acceptedCk = edgeSnapshot(accepted)
+    val keys = stages.stage(
+      "keys",
+      Nil,
+      Seq(count(lit(1)).as("blocked_key_rows"), approx_count_distinct(col("url")).as("pages_with_keys_approx"))
+    )(Blocker.allKeys(corpus, cfg.strategies))
+    val pairs =
+      stages.stage("pairs", Seq("keys"), Seq(count(lit(1)).as("candidate_pairs")))(candidatePairs(corpus, keys, cfg))
+    var releaseFeats: () => Unit = () => ()
+    val accepted = stages.stage(
+      "accepted",
+      Seq("pairs"),
+      Seq(
+        count(lit(1)).as("accepted_edges"),
+        avg(col("score")).as("accepted_score_avg"),
+        min(col("score")).as("accepted_score_min")
+      )
+    ) {
+      val (feats, release) = PairScorer.featuresWithRelease(corpus)
+      releaseFeats = release
+      PairScorer.threshold(PairScorer.score(pairs, feats, cfg.weights), cfg.weights, cfg.perKeyThresholds)
+    }
     releaseFeats() // pair join materialized; drop the tokenize+hash cache
 
     phase("cc")
-    val clusters = ConnectedComponents.run(
-      acceptedCk.select(col("urlA").as("src"), col("urlB").as("dst")),
-      cfg.maxCcIterations,
-      ccSnapshot,
-      // the ids map outlives the iterations (read again by the final
-      // map-back), so durable runs give it its own NON-rotating root
-      idSnapshot = cfg.checkpointDir.map(d => Checkpoints.reliable(s"$d/cc-ids"))
-    )
+    val clusters = stages.components(accepted.select(col("urlA").as("src"), col("urlB").as("dst")))
 
     phase("assemble")
-    val out = assemblePredictions(corpus, clusters, acceptedCk)
+    val out = stages.stage("predictions", Seq("accepted"), Nil)(assemblePredictions(corpus, clusters, accepted))
     if (!plainScan) corpus.unpersist(blocking = false)
     // the caller's terminal action (sink write / foreach) runs whatever
     // remains of the lazy tail under this label
@@ -185,9 +208,76 @@ object LinkagePipeline {
     out
   }
 
-  /** Prediction-assembly tail, shared by `run`, `runResumable`, the
-    * battery's symbolic pipelines and the benchmark's per-layer leg so they
-    * can never time or ship diverging semantics: best accepted score per
+  /** Where each stage of the flagship DAG materializes: the only thing
+    * `run` and `runResumable` differ in.
+    */
+  private sealed trait StagePolicy {
+
+    /** Stage `name` (read from stages `inputs`) computed by `compute`;
+      * `metrics` are its in-flight counters where the policy records any.
+      */
+    def stage(name: String, inputs: Seq[String], metrics: Seq[Column])(compute: => DataFrame): DataFrame
+
+    /** Components (url, cluster_id) of an accepted (src, dst) edge set. */
+    def components(edges: DataFrame): DataFrame
+  }
+
+  /** `run`'s policy: only the accepted edge set materializes. Scoring and
+    * CC both read it, and it is re-read after CC (bestScores), so its root
+    * keeps every checkpoint; CC rounds only ever read the latest frame and
+    * rotate keep-last-2 under `cc`, and the ids map of a deep graph's
+    * mid-run compaction, re-read by the final map-back, gets its own
+    * non-rotating root `cc-ids`.
+    */
+  private final class InMemory(cfg: Config) extends StagePolicy {
+    def stage(name: String, inputs: Seq[String], metrics: Seq[Column])(compute: => DataFrame): DataFrame =
+      if (name == "accepted") checkpointRoot(cfg, "accepted")(compute) else compute
+    def components(edges: DataFrame): DataFrame =
+      ConnectedComponents.run(
+        edges,
+        cfg.maxCcIterations,
+        checkpointRoot(cfg, "cc", keepLast = 2),
+        Some(checkpointRoot(cfg, "cc-ids"))
+      )
+  }
+
+  /** `runResumable`'s policy: every stage is read when its manifest is
+    * valid, else committed through `io` with its counters riding the
+    * stage's own write job as `df.observe()` metrics (zero extra passes;
+    * the manifest is the progress feed the reference streams over SSE,
+    * app/api/routes.py:552-575). CC commits each round as `cc_iter_<k>`.
+    */
+  private final class Committed(cfg: Config, io: graft.io.TableIO, spark: SparkSession) extends StagePolicy {
+    def stage(name: String, inputs: Seq[String], metrics: Seq[Column])(compute: => DataFrame): DataFrame =
+      io.readStage(spark, name).getOrElse {
+        if (metrics.isEmpty) io.commitStage(compute, name, inputs)
+        else {
+          val obs = org.apache.spark.sql.Observation()
+          // bounded wait (graft.util.Observations): commit empty metrics,
+          // with a stderr note, if the write job didn't drive the observation
+          io.commitStage(
+            compute.observe(obs, metrics.head, metrics.tail: _*),
+            name,
+            inputs,
+            () => graft.util.Observations.getWithin(obs).collect { case (k, v: Number) => k -> v.doubleValue() }
+          )
+        }
+      }
+    def components(edges: DataFrame): DataFrame =
+      ConnectedComponents.runResumable(edges, io, cfg.maxCcIterations)
+  }
+
+  /** Snapshot function for checkpoint root `root`: with
+    * `cfg.checkpointDir` set, durable Parquet checkpoints under
+    * `<checkpointDir>/<root>` (rotating keep-last-`keepLast`; 0 keeps all),
+    * else the serialized localCheckpoint.
+    */
+  private[graft] def checkpointRoot(cfg: Config, root: String, keepLast: Int = 0): DataFrame => DataFrame =
+    cfg.checkpointDir.map(d => Checkpoints.reliable(s"$d/$root", keepLast)).getOrElse(Checkpoints.serializedLocal)
+
+  /** Prediction-assembly tail, shared by the flagship DAG (both stage
+    * policies), the battery's symbolic pipelines and the benchmark's
+    * per-layer leg so they can never time or ship diverging semantics: best accepted score per
     * url, cluster join-back from the projected (url, text) corpus — never
     * the raw input frame, so extra input columns (e.g. a cluster_id when
     * re-linking a previous output) cannot collide with the prediction
@@ -288,74 +378,4 @@ object LinkagePipeline {
     */
   private[graft] def withWindowPairs(keyPairs: DataFrame, window: Option[DataFrame]): DataFrame =
     window.fold(keyPairs)(wp => Blocker.minKeyPerPair(keyPairs.unionByName(wp)))
-
-  /** Resumable variant of `run`: every stage commits a Parquet snapshot +
-    * manifest through `io`, and a restarted run with the same config hash
-    * resumes from the last committed stage (SURVEY.md §4.3). Stage DAG:
-    * keys -> pairs -> accepted(score+threshold) -> cc_iter_* -> predictions.
-    */
-  def runResumable(pages: DataFrame, cfg: Config, io: graft.io.TableIO): DataFrame = {
-    val spark = pages.sparkSession
-    val corpus = pages.select("url", "text")
-
-    // A2 in-flight progress counters: df.observe() rides the stage's own
-    // write job (zero extra passes) and the values land in the stage
-    // manifest — the reference streams these over SSE
-    // (app/api/routes.py:552-575); here the manifest is the progress feed
-    // bounded wait (shared with ConnectedComponents.snapshotWithSignature):
-    // obs.get blocks forever if the stage's write job didn't drive the
-    // observation; commit empty metrics (with a stderr note) over hanging
-    def metricsOf(obs: org.apache.spark.sql.Observation): Map[String, Double] =
-      graft.util.Observations.getWithin(obs).collect { case (k, v: Number) => k -> v.doubleValue() }.toMap
-
-    val keys = io
-      .readStage(spark, "keys")
-      .getOrElse {
-        val obs = org.apache.spark.sql.Observation()
-        val observed = Blocker
-          .allKeys(corpus, cfg.strategies)
-          .observe(
-            obs,
-            count(lit(1)).as("blocked_key_rows"),
-            approx_count_distinct(col("url")).as("pages_with_keys_approx")
-          )
-        io.commitStage(observed, "keys", Nil, () => metricsOf(obs))
-      }
-    val pairs = io
-      .readStage(spark, "pairs")
-      .getOrElse {
-        val obs = org.apache.spark.sql.Observation()
-        val observed = candidatePairs(corpus, keys, cfg)
-          .observe(obs, count(lit(1)).as("candidate_pairs"))
-        io.commitStage(observed, "pairs", Seq("keys"), () => metricsOf(obs))
-      }
-    val accepted = io
-      .readStage(spark, "accepted")
-      .getOrElse {
-        val (feats, releaseFeats) = PairScorer.featuresWithRelease(corpus)
-        val scored = PairScorer.score(pairs, feats, cfg.weights)
-        val obs = org.apache.spark.sql.Observation()
-        val observed = PairScorer
-          .threshold(scored, cfg.weights, cfg.perKeyThresholds)
-          .observe(
-            obs,
-            count(lit(1)).as("accepted_edges"),
-            avg(col("score")).as("accepted_score_avg"),
-            min(col("score")).as("accepted_score_min")
-          )
-        val committed = io.commitStage(observed, "accepted", Seq("pairs"), () => metricsOf(obs))
-        releaseFeats()
-        committed
-      }
-
-    val clusters = ConnectedComponents.runResumable(
-      accepted.select(col("urlA").as("src"), col("urlB").as("dst")),
-      io,
-      cfg.maxCcIterations
-    )
-
-    io.readStage(spark, "predictions").getOrElse {
-      io.commitStage(assemblePredictions(corpus, clusters, accepted), "predictions", Seq("accepted"))
-    }
-  }
 }

@@ -169,4 +169,35 @@ class IncrementalLinkSpec extends SparkSpec {
     val b = inc.predictions.select(cols.map(col): _*).orderBy("url").collect()
     assert(a.sameElements(b), "no-op delta must leave predictions unchanged")
   }
+
+  test("featuresWithRelease == featuresWithIdf over the corpus's own IDF artifact, row for row") {
+    import graft.operators.PairScorer
+    // the exactness contract rests on this: a base scored with its own
+    // stats and a delta scored through artifacts see the same weights
+    def rows(features: (org.apache.spark.sql.DataFrame, () => Unit)) = {
+      val (feats, release) = features
+      try
+        feats
+          .select("url", "title_norm", "text_cap", "tfidf.ts", "tfidf.ws")
+          .collect()
+          .map { r =>
+            val bits = Option(r.getSeq[Double](4)).map(_.map(java.lang.Double.doubleToRawLongBits))
+            (r.getString(0), r.getString(1), r.getString(2), Option(r.getSeq[Long](3)), bits)
+          }
+          .sortBy(_.toString)
+          .toSeq
+      finally release()
+    }
+    val corpora = Seq(
+      "seeded WebCorpus" -> WebCorpus.pages(spark, WebCorpus.Config(numClusters = 40, seed = 11L)).toDF,
+      "empty" -> Seq.empty[(String, String)].toDF("url", "text"),
+      "all-blank" -> Seq(("u1", ""), ("u2", "   "), ("u3", "\t\n")).toDF("url", "text")
+    )
+    corpora.foreach { case (name, corpus) =>
+      val own = rows(PairScorer.featuresWithRelease(corpus))
+      assert(own == rows(PairScorer.featuresWithIdf(corpus, Seq(PairScorer.idfArtifact(corpus)))), name)
+      assert(own.size == corpus.count(), name)
+      if (name == "seeded WebCorpus") assert(own.exists(_._5.exists(_.nonEmpty)), "no tfidf weights to compare")
+    }
+  }
 }

@@ -63,6 +63,32 @@ class JobLedgerSpec extends SparkSpec {
     assert(snap.stageRunMs.nonEmpty && snap.stageRunMs.keys.forall(!_.contains(".java:")), snap.stageLines)
   }
 
+  test("runResumable jobs carry the flagship phases, also after a run on the same thread") {
+    val pages = WebCorpus.pages(spark, WebCorpus.Config(numClusters = 20, seed = 6L)).toDF()
+    def resumableJobs(tag: String) = {
+      val dir = s"$tmp/resumable-$tag"
+      val io = new graft.io.ParquetTableIO(dir, "run1", graft.io.TableIO.configHash(Map("t" -> tag)))
+      val ledger = JobLedger.install(spark.sparkContext)
+      try {
+        LinkagePipeline.runResumable(pages, LinkagePipeline.Config(), io).write.mode("overwrite").parquet(s"$dir/out")
+        ledger.snapshot().jobs
+      } finally ledger.remove()
+    }
+    def check(jobs: Seq[JobLedger.Job], when: String): Unit = {
+      assert(jobs.map(_.phase).toSet.subsetOf(flagship), s"$when: ${jobs.map(_.phase).distinct}")
+      // derived input: ingest persists the corpus
+      assert(Set("ingest", "block+score", "cc", "assemble").subsetOf(jobs.map(_.phase).toSet), when)
+      val writes = jobs.filter(_.site.startsWith("graft.JobLedgerSpec"))
+      assert(writes.nonEmpty && writes.forall(_.phase == "sink"), s"$when: $writes")
+    }
+    spark.sparkContext.clearJobGroup()
+    check(resumableJobs("cold"), "ungrouped thread")
+    // --warmup: a run leaves graft:sink set on the thread
+    LinkagePipeline.run(pages).foreach(_ => ())
+    check(resumableJobs("warm"), "after a run")
+    spark.sparkContext.clearJobGroup()
+  }
+
   test("--monitor true reports task counters, the phase table, and leaks no listener") {
     val opts = Seq("input" -> "synth:400", "output" -> s"$tmp/monitor", "monitor" -> "true")
     val out = runCli(opts: _*)

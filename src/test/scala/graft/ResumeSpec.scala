@@ -193,6 +193,51 @@ class ResumeSpec extends SparkSpec {
     rmrf(java.nio.file.Paths.get(base))
   }
 
+  test("runResumable reproduces run") {
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("graft-resume-eq").toString
+    WebCorpus.pages(spark, WebCorpus.Config(numClusters = 40, seed = 3L)).toDF
+      .write.mode("overwrite").parquet(s"$base/input")
+    val scan = spark.read.parquet(s"$base/input")
+    // a join upstream: the pipeline persists this input instead of re-scanning it
+    val derived = scan.join(scan.select(col("url"), length(col("text")).as("n")), "url")
+    val cases = Seq(
+      ("plain scan", scan, LinkagePipeline.Config()),
+      ("derived input", derived, LinkagePipeline.Config()),
+      ("window passes", scan, LinkagePipeline.Config(windowPasses = Seq(("url", 3))))
+    )
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "cluster_id", "score", "status", "text", "seq").collect().toSet
+    cases.foreach { case (name, pages, cfg) =>
+      val hash = TableIO.configHash(Map("case" -> name))
+      val io = new ParquetTableIO(base, runId = "run1", configHash = hash)
+      val expected = rows(LinkagePipeline.run(pages, cfg))
+      assert(rows(LinkagePipeline.runResumable(pages, cfg, io)) == expected, name)
+
+      // the committed stages and their lineage: keys -> pairs -> accepted,
+      // cc_iter_0..k chained, predictions from accepted
+      val stages = Files
+        .list(java.nio.file.Paths.get(s"$base/snapshots/$hash"))
+        .map[String](_.getFileName.toString)
+        .toArray
+        .map(_.toString)
+        .toSet
+      val iters = stages.filter(_.startsWith("cc_iter_")).map(_.stripPrefix("cc_iter_").toInt).toSeq.sorted
+      assert(iters.nonEmpty && iters == iters.indices, s"$name: $stages")
+      assert(stages == Set("keys", "pairs", "accepted", "predictions") ++ iters.map(i => s"cc_iter_$i"), name)
+      val lineage = Map(
+        "keys" -> Nil,
+        "pairs" -> List("keys"),
+        "accepted" -> List("pairs"),
+        "predictions" -> List("accepted")
+      ) ++ iters.map(i => s"cc_iter_$i" -> (if (i == 0) Nil else List(s"cc_iter_${i - 1}")))
+      lineage.foreach { case (st, inputs) =>
+        assert(io.manifest(st).map(_.inputStages).contains(inputs), s"$name: $st")
+      }
+    }
+    rmrf(java.nio.file.Paths.get(base))
+  }
+
   test("configHash is canonical (order-insensitive, value-sensitive)") {
     assert(
       TableIO.configHash(Map("a" -> "1", "b" -> "2")) == TableIO.configHash(Map("b" -> "2", "a" -> "1"))
