@@ -11,6 +11,27 @@ import graft.pipeline.LinkagePipeline
   * in `oracleSql` wherever the semantics are expressible in ANSI SQL.
   * Custom-expression ops (Jaro-Winkler, SimHash, MinHash, fingerprints) are
   * rows-only here and exactness-tested in ScalaTest instead.
+  *
+  * The symbolic ER rows (every step recomputed by the oracle in SQL) share
+  * one fixture, spelled once below; each piece has a frozen SQL mirror in
+  * `oracleSql` that must change with it:
+  *  - [[bandKey]]/[[tokenKey]] and [[symKeys]], the two-family key scheme
+  *    (`b|lang|n_chars/5`, `t|<first two tokens>`): the `keys` CTE of
+  *    [[metablockCte]] and of the q_er_blocking_eval, q_er_metablock_filter,
+  *    q_er_skew_census (band family), q_er_pipeline_sym, q_inc_link,
+  *    q_inc_unlink, q_er_cluster_diag and q_dd_resolve oracles;
+  *  - [[pages60]], the 60-char corpus: their `pages` CTE
+  *    (`doc_id AS url, substr(text, 1, 60) AS text, lang, n_chars`);
+  *  - [[levAccept]]/[[acceptAndCluster]], the lev ratio >= 0.4 accept and
+  *    its closure: the `accepted` and recursive `reach` CTEs of the
+  *    q_er_pipeline_sym, q_inc_link and q_er_cluster_diag oracles;
+  *  - [[chainEdges]], the same-lang |n_chars diff| <= 1 chain graph: the
+  *    `e` CTE of the q_er_cc oracle, the `t1` CTE of q_er_canopy's and the
+  *    edge CTE of [[ccPivotOracle]];
+  *  - [[bandGold]] and [[symClusterings]], the (lang, n_chars/10) band gold
+  *    and the first-two-tokens prediction: the `gold` CTEs of the
+  *    q_er_blocking_eval, q_er_progressive, q_er_cluster_eval and
+  *    q_er_cluster_ari oracles.
   */
 object SparkEntry {
 
@@ -32,24 +53,103 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Two-family symbolic blocking keys over documents — the meta-blocking
-    * battery rows' shared input (same scheme as q_er_blocking_eval):
-    * a coarse (lang, n_chars/5) band key and a first-2-tokens content key.
-    * Output: (url = doc_id, key).
+  /** The coarse band key of the symbolic scheme: b|lang|floor(n_chars/5).
+    * /5, not /50: a fixed-range attribute band grows linearly with the
+    * corpus, so the wide band made q_er_pipeline_sym pay ~700k pairs at
+    * sf0.1; the tight band keeps pairs ~45k there while still producing
+    * real multi-node clusters at sf0.01.
+    */
+  private def bandKey: Column =
+    concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
+
+  /** The content key of the symbolic scheme: t|<first two space tokens>. */
+  private def tokenKey: Column =
+    concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
+
+  /** Two-family symbolic blocking keys (url, key), band family first, over
+    * a frame with lang, n_chars, text and the id column `url`.
+    */
+  private[graft] def symKeys(p: DataFrame, url: String = "url"): DataFrame = {
+    def u = if (url == "url") col(url) else col(url).as("url")
+    p.select(u, bandKey).unionAll(p.select(u, tokenKey))
+  }
+
+  /** The 60-char corpus: (`id`, text cut to 60 chars, lang, n_chars). */
+  private[graft] def pages60(s: SparkSession, dir: String, id: Column = col("doc_id").as("url")): DataFrame =
+    t(s, dir, "documents").select(id, substring(col("text"), 1, 60).as("text"), col("lang"), col("n_chars"))
+
+  /** Candidate pairs (urlA, urlB) scored by lev ratio against `texts`
+    * (url, text) and kept at score >= 0.4: (urlA, urlB, score).
+    */
+  private def levAccept(pairs: DataFrame, texts: DataFrame): DataFrame = pairs
+    .join(texts.select(col("url").as("urlA"), col("text").as("t_a")), "urlA")
+    .join(texts.select(col("url").as("urlB"), col("text").as("t_b")), "urlB")
+    .select(col("urlA"), col("urlB"), Normalize.levRatio(col("t_a"), col("t_b")).as("score"))
+    .where(col("score") >= 0.4)
+
+  /** Block `keys` at `cap`, accept by [[levAccept]] and close the
+    * accepted edges: (accepted, CC assignments (url, cluster_id)). The
+    * edges are materialized once: every caller reads them again after CC
+    * (diagnostics, best scores), and each un-materialized read would
+    * recompute the quadratic pair join and the lev kernel.
+    */
+  private[graft] def acceptAndCluster(keys: DataFrame, texts: DataFrame, cap: Int): (DataFrame, DataFrame) = {
+    val accepted = graft.util.Checkpoints.serializedLocal(
+      levAccept(graft.operators.Blocker.pairs(keys, maxBlockSize = cap), texts)
+    )
+    (accepted, ConnectedComponents.run(accepted.select(col("urlA").as("src"), col("urlB").as("dst"))))
+  }
+
+  /** The chain graph over nodes (id, lang, n_chars): same lang, |n_chars
+    * diff| <= 1, both orientations, as (src, dst). An EQUI-join: b emits
+    * keys nc_b-1, nc_b, nc_b+1 and a joins on its own n_chars, so exactly
+    * one of b's three keys matches per qualifying pair (no post-filter, no
+    * dedup), and the join key (lang, n_chars) is high-cardinality instead
+    * of per-lang quadratic.
+    */
+  private def chainEdges(nodes: DataFrame): DataFrame = {
+    val a = nodes.select(col("id").as("src"), col("lang"), col("n_chars"))
+    val b = nodes
+      .select(col("id").as("dst"), col("lang").as("lang_b"), col("n_chars").as("nc_b"))
+      .select(col("dst"), col("lang_b"), explode(array(col("nc_b") - 1, col("nc_b"), col("nc_b") + 1)).as("nc_key"))
+    a.join(b, col("lang") === col("lang_b") && col("n_chars") === col("nc_key") && col("src") =!= col("dst"))
+      .select("src", "dst")
+  }
+
+  /** Band-rule gold pairs over documents `d`: same (lang,
+    * floor(n_chars/10)), as (url_a, url_b) with url_a < url_b.
+    */
+  private def bandGold(d: DataFrame): DataFrame = {
+    val g = d.select(col("doc_id").as("u"), col("lang"), floor(col("n_chars") / 10).as("band"))
+    g.select(col("u").as("url_a"), col("lang"), col("band"))
+      .join(g.select(col("u").as("url_b"), col("lang"), col("band")), Seq("lang", "band"))
+      .where(col("url_a") < col("url_b"))
+      .select("url_a", "url_b")
+  }
+
+  /** The symbolic clustering pair: predicted (url, cluster_id = first two
+    * tokens) and gold (url, gold_id = lang|floor(n_chars/10)).
+    */
+  private def symClusterings(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val d = t(s, dir, "documents")
+    val pred = d.select(
+      col("doc_id").as("url"),
+      array_join(slice(split(col("text"), " "), 1, 2), " ").as("cluster_id")
+    )
+    val gold = d.select(
+      col("doc_id").as("url"),
+      concat_ws("|", col("lang"), floor(col("n_chars") / 10).cast("long")).as("gold_id")
+    )
+    (pred, gold)
+  }
+
+  /** [[symKeys]] over documents, optionally plus an id-mod-7 partition
+    * family — the meta-blocking battery rows' shared input. Output:
+    * (url = doc_id, key).
     */
   private def metablockKeys(s: SparkSession, dir: String, withP: Boolean = false): DataFrame = {
     val d = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-    val two = d
-      .select(
-        col("doc_id").as("url"),
-        concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-      )
-      .unionAll(
-        d.select(
-          col("doc_id").as("url"),
-          concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
-        )
-      )
+    val two = symKeys(d, "doc_id")
     if (!withP) two
     else
       two.unionAll(
@@ -569,24 +669,7 @@ object SparkEntry {
       // counts only (the quadratic set is never materialized); coverage is
       // two keyed joins of the gold set against the key table.
       val d = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      val keys = d
-        .select(
-          col("doc_id").as("url"),
-          concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-        )
-        .unionAll(
-          d.select(
-            col("doc_id").as("url"),
-            concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
-          )
-        )
-      val g = d.select(col("doc_id").as("u"), col("lang"), floor(col("n_chars") / 10).as("band"))
-      val gold = g
-        .select(col("u").as("url_a"), col("lang"), col("band"))
-        .join(g.select(col("u").as("url_b"), col("lang"), col("band")), Seq("lang", "band"))
-        .where(col("url_a") < col("url_b"))
-        .select("url_a", "url_b")
-      graft.eval.BlockingEval.metricsDf(keys, gold)
+      graft.eval.BlockingEval.metricsDf(symKeys(d, "doc_id"), bandGold(d))
     }),
 
     "q_er_metablock_wep" -> ((s, dir) => {
@@ -626,17 +709,10 @@ object SparkEntry {
       val e = graft.operators.MetaBlocking.edges(
         graft.operators.MetaBlocking.purge(metablockKeys(s, dir), 60)
       )
-      val d = t(s, dir, "documents")
-      val g = d.select(col("doc_id").as("u"), col("lang"), floor(col("n_chars") / 10).as("band"))
-      val gold = g
-        .select(col("u").as("url_a"), col("lang"), col("band"))
-        .join(g.select(col("u").as("url_b"), col("lang"), col("band")), Seq("lang", "band"))
-        .where(col("url_a") < col("url_b"))
-        .select("url_a", "url_b")
       graft.operators.MetaBlocking
         .progressiveRecall(
           graft.operators.MetaBlocking.progressive(e, "js"),
-          gold,
+          bandGold(t(s, dir, "documents")),
           Seq(100L, 500L, 2000L, 100000L)
         )
         .orderBy("budget")
@@ -672,10 +748,7 @@ object SparkEntry {
       // hash-agg + take-ordered, <= topN rows out, (n desc, key) ties
       val d = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
       val keys = d
-        .select(
-          col("doc_id").as("url"),
-          concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-        )
+        .select(col("doc_id").as("url"), bandKey)
         .unionAll(
           d.select(col("doc_id").as("url"), concat_ws("|", lit("l"), col("lang")).as("key"))
         )
@@ -731,30 +804,14 @@ object SparkEntry {
       // cluster-level evaluation (B-cubed + V-measure) of a symbolic
       // predicted clustering (first-2-tokens key) against a band-rule gold
       // — all contingency-cell algebra, replayed engine-free by the oracle.
-      val d = t(s, dir, "documents")
-      val pred = d.select(
-        col("doc_id").as("url"),
-        array_join(slice(split(col("text"), " "), 1, 2), " ").as("cluster_id")
-      )
-      val gold = d.select(
-        col("doc_id").as("url"),
-        concat_ws("|", col("lang"), floor(col("n_chars") / 10).cast("long")).as("gold_id")
-      )
+      val (pred, gold) = symClusterings(s, dir)
       graft.eval.ClusterEval.metricsDf(pred, gold)
     }),
     "q_er_cluster_ari" -> ((s, dir) => {
       // Adjusted Rand Index of the same symbolic pred/gold pair as
       // q_er_cluster_eval — exact integer pair combinatorics down to two
       // final divisions, replayed verbatim by the oracle.
-      val d = t(s, dir, "documents")
-      val pred = d.select(
-        col("doc_id").as("url"),
-        array_join(slice(split(col("text"), " "), 1, 2), " ").as("cluster_id")
-      )
-      val gold = d.select(
-        col("doc_id").as("url"),
-        concat_ws("|", col("lang"), floor(col("n_chars") / 10).cast("long")).as("gold_id")
-      )
+      val (pred, gold) = symClusterings(s, dir)
       graft.eval.ClusterEval.ariDf(pred, gold)
     }),
     "q_er_survivorship" -> ((s, dir) => {
@@ -991,21 +1048,7 @@ object SparkEntry {
           col("lang") === col("l2") && col("n_chars") === col("n2") && col("src") =!= col("dst")
         )
         .select("src", "dst")
-      val b = d
-        .select(col("id").as("dst"), col("lang").as("lang_b"), col("n_chars").as("nc_b"))
-        .select(
-          col("dst"),
-          col("lang_b"),
-          explode(array(col("nc_b") - 1, col("nc_b"), col("nc_b") + 1)).as("nc_key")
-        )
-      val t1 = d
-        .select(col("id").as("src"), col("lang"), col("n_chars"))
-        .join(
-          b,
-          col("lang") === col("lang_b") && col("n_chars") === col("nc_key") && col("src") =!= col("dst")
-        )
-        .select("src", "dst")
-      graft.operators.Canopy.canopies(d.select("id"), t1, t2).orderBy("id", "canopy")
+      graft.operators.Canopy.canopies(d.select("id"), chainEdges(d), t2).orderBy("id", "canopy")
     }),
     "q_er_ppjoin" -> ((s, dir) => {
       // prefix-filtered set-similarity join (SSJoin/PPJoin): candidates
@@ -1190,38 +1233,9 @@ object SparkEntry {
       // weakest and strongest internal links, every value a single
       // division or min/max of exact-rational scores — the oracle replays
       // the closure AND the diagnostics engine-free
-      val pages = t(s, dir, "documents").select(
-        col("doc_id").as("url"),
-        substring(col("text"), 1, 60).as("text"),
-        col("lang"),
-        col("n_chars")
-      )
-      val keys = pages
-        .select(
-          col("url"),
-          concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-        )
-        .unionAll(
-          pages.select(
-            col("url"),
-            concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
-          )
-        )
+      val pages = pages60(s, dir)
       val texts = pages.select("url", "text")
-      // one materialization of the scored edge set: CC and the diagnostics
-      // pass both consume it (recomputing the quadratic lev join twice
-      // dominated this query's wall)
-      val accepted = graft.util.Checkpoints.serializedLocal(
-        graft.operators.Blocker
-          .pairs(keys, maxBlockSize = 100000)
-          .join(texts.select(col("url").as("urlA"), col("text").as("t_a")), "urlA")
-          .join(texts.select(col("url").as("urlB"), col("text").as("t_b")), "urlB")
-          .select(col("urlA"), col("urlB"), Normalize.levRatio(col("t_a"), col("t_b")).as("score"))
-          .where(col("score") >= 0.4)
-      )
-      val clusters = graft.operators.ConnectedComponents.run(
-        accepted.select(col("urlA").as("src"), col("urlB").as("dst"))
-      )
+      val (accepted, clusters) = acceptAndCluster(symKeys(pages), texts, 100000)
       // materialized once: diagnostics reads its assignment frame twice
       // (member counts + the edge-side cluster attach), and each
       // un-materialized read replays the CC star-forest map-back join
@@ -1247,18 +1261,7 @@ object SparkEntry {
       // connected components over a real chain graph: same lang, adjacent n_chars
       val nodes = t(s, dir, "documents")
         .select(lpad(col("doc_id").cast("string"), 6, "0").as("id"), col("lang"), col("n_chars"))
-      // |n_chars diff| <= 1 as an EQUI-join: b emits keys nc_b-1, nc_b,
-      // nc_b+1, a joins on its own n_chars — exactly one of b's three keys
-      // matches per qualifying pair (no post-filter, no dedup), and the join
-      // key (lang, n_chars) is high-cardinality instead of per-lang quadratic
-      val a = nodes.select(col("id").as("src"), col("lang"), col("n_chars"))
-      val b = nodes
-        .select(col("id").as("dst"), col("lang").as("lang_b"), col("n_chars").as("nc_b"))
-        .select(col("dst"), col("lang_b"), explode(array(col("nc_b") - 1, col("nc_b"), col("nc_b") + 1)).as("nc_key"))
-      val edges = a
-        .join(b, col("lang") === col("lang_b") && col("n_chars") === col("nc_key") && col("src") =!= col("dst"))
-        .select("src", "dst")
-      val assign = ConnectedComponents.run(edges)
+      val assign = ConnectedComponents.run(chainEdges(nodes))
       // include isolated nodes as their own cluster
       nodes
         .select(col("id"))
@@ -1272,22 +1275,8 @@ object SparkEntry {
       // alternative. Deterministic xxhash64 ranks; the oracle replays every
       // peeling round engine-free (unrolled CTE stages + poison row).
       val nodes = t(s, dir, "documents").select(col("doc_id").as("id"), col("lang"), col("n_chars"))
-      val a = nodes.select(col("id").as("src"), col("lang"), col("n_chars"))
-      val b = nodes
-        .select(col("id").as("dst"), col("lang").as("lang_b"), col("n_chars").as("nc_b"))
-        .select(
-          col("dst"),
-          col("lang_b"),
-          explode(array(col("nc_b") - 1, col("nc_b"), col("nc_b") + 1)).as("nc_key")
-        )
-      val edges = a
-        .join(
-          b,
-          col("lang") === col("lang_b") && col("n_chars") === col("nc_key") && col("src") =!= col("dst")
-        )
-        .select("src", "dst")
       graft.operators.CorrelationClustering
-        .pivot(edges)
+        .pivot(chainEdges(nodes))
         .select(col("id"), col("pivot").as("pivot_id"))
         .orderBy("id")
     }),
@@ -1390,40 +1379,9 @@ object SparkEntry {
       // are verified engine-free. urls are the raw BIGINT doc_ids: Spark's
       // xxhash64 over a long has a closed form the oracle re-derives in
       // HUGEINT arithmetic (same chain as q_ann_ivf's codebook sample).
-      val pages = t(s, dir, "documents").select(
-        col("doc_id").as("url"),
-        substring(col("text"), 1, 60).as("text"),
-        col("lang"),
-        col("n_chars")
-      )
-      val k1 = pages.select(
-        col("url"),
-        // /5 band, not /50: a fixed-range attribute band grows linearly
-        // with the corpus, so the wide band made the battery query pay
-        // ~700k pairs at sf0.1; the tight band keeps pairs ~45k there while
-        // still producing real multi-node clusters at sf0.01
-        concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-      )
-      val k2 = pages.select(
-        col("url"),
-        concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
-      )
+      val pages = pages60(s, dir)
       val texts = pages.select(col("url"), col("text"))
-      val pairs = graft.operators.Blocker.pairs(k1.unionAll(k2), maxBlockSize = 4)
-      // materialize the scored edge set ONCE (the production run()'s
-      // acceptedCk move): CC and assemblePredictions (which itself reads
-      // accepted twice for bestScore) would otherwise each recompute the
-      // quadratic pair join + lev kernel
-      val accepted = graft.util.Checkpoints.serializedLocal(
-        pairs
-          .join(texts.select(col("url").as("urlA"), col("text").as("t_a")), "urlA")
-          .join(texts.select(col("url").as("urlB"), col("text").as("t_b")), "urlB")
-          .select(col("urlA"), col("urlB"), Normalize.levRatio(col("t_a"), col("t_b")).as("score"))
-          .where(col("score") >= 0.4)
-      )
-      val clusters = graft.operators.ConnectedComponents.run(
-        accepted.select(col("urlA").as("src"), col("urlB").as("dst"))
-      )
+      val (accepted, clusters) = acceptAndCluster(symKeys(pages), texts, 4)
       LinkagePipeline
         .assemblePredictions(texts, clusters, accepted)
         .select("url", "cluster_id", "status", "seq")
@@ -1440,41 +1398,14 @@ object SparkEntry {
       // recomputes the UNION closure engine-free — the oracle checks the
       // incremental == rerun theorem itself, not a replay of the
       // incremental steps.
-      val pages = t(s, dir, "documents").select(
-        col("doc_id").as("url"),
-        substring(col("text"), 1, 60).as("text"),
-        col("lang"),
-        col("n_chars")
-      )
-      def keysOf(p: org.apache.spark.sql.DataFrame) =
-        p.select(
-          col("url"),
-          concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-        ).unionAll(
-          p.select(
-            col("url"),
-            concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
-          )
-        )
+      val pages = pages60(s, dir)
       val texts = pages.select("url", "text")
-      def levAccept(pairs: org.apache.spark.sql.DataFrame) = pairs
-        .join(texts.select(col("url").as("urlA"), col("text").as("t_a")), "urlA")
-        .join(texts.select(col("url").as("urlB"), col("text").as("t_b")), "urlB")
-        .select(col("urlA"), col("urlB"), Normalize.levRatio(col("t_a"), col("t_b")).as("score"))
-        .where(col("score") >= 0.4)
-
       val base = pages.where(pmod(col("url"), lit(4)) =!= 0)
       val delta = pages.where(pmod(col("url"), lit(4)) === 0)
 
       // ---- base run (plays the already-committed production run) ----
-      val baseKeys = keysOf(base)
-      // snapshot: read by CC and by the base store's best-score column
-      val baseAcc = graft.util.Checkpoints.serializedLocal(
-        levAccept(graft.operators.Blocker.pairs(baseKeys, maxBlockSize = 100000))
-      )
-      val baseClusters = graft.operators.ConnectedComponents.run(
-        baseAcc.select(col("urlA").as("src"), col("urlB").as("dst"))
-      )
+      val baseKeys = symKeys(base)
+      val (baseAcc, baseClusters) = acceptAndCluster(baseKeys, texts, 100000)
       // snapshot: read twice (contractAndCluster + the relabel) — without
       // it each reference replays the base CC map-back joins
       val baseStore = graft.util.Checkpoints.serializedLocal(
@@ -1484,13 +1415,14 @@ object SparkEntry {
       )
 
       // ---- incremental step: link()'s contract, relabel and fresh rows ----
-      val deltaKeys = keysOf(delta)
+      val deltaKeys = symKeys(delta)
       val oldHot = baseKeys.join(deltaKeys.select("key").distinct(), Seq("key"), "left_semi")
       // snapshot: consumed by contractAndCluster AND the best-score frame —
       // un-materialized, the delta pair join + lev kernel would run twice
       val accInc = graft.util.Checkpoints.serializedLocal(
         levAccept(
-          graft.operators.IncrementalLinkage.candidatePairs(deltaKeys, oldHot, maxBlockSize = 100000)
+          graft.operators.IncrementalLinkage.candidatePairs(deltaKeys, oldHot, maxBlockSize = 100000),
+          texts
         )
       )
       val cl = graft.operators.IncrementalLinkage
@@ -1519,23 +1451,8 @@ object SparkEntry {
       import graft.operators.{Blocker, ConnectedComponents, IncrementalLinkage, PairScorer}
       val W = PairScorer.Weights(jw = 0.0, lev = 1.0, cosine = 0.0, threshold = 0.4)
       val symCfg = LinkagePipeline.Config(weights = W, maxBlockSize = 100000)
-      val pages = t(s, dir, "documents").select(
-        col("doc_id").as("url"),
-        substring(col("text"), 1, 60).as("text"),
-        col("lang"),
-        col("n_chars")
-      )
-      val keys = pages
-        .select(
-          col("url"),
-          concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-        )
-        .unionAll(
-          pages.select(
-            col("url"),
-            concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
-          )
-        )
+      val pages = pages60(s, dir)
+      val keys = symKeys(pages)
       val texts = pages.select("url", "text")
       // base run through the production scoring path (the same score the
       // removal's survivor-pair rescore recomputes)
@@ -1750,23 +1667,12 @@ object SparkEntry {
       // (checkpointed CC), picks the longest-text/min-id canonical per
       // cluster, and emits keep/drop; the oracle replays closure with a
       // recursive CTE and the canonical rule with a window
-      val pages = t(s, dir, "documents").select(
-        col("doc_id"),
-        substring(col("text"), 1, 60).as("text"),
-        col("lang"),
-        col("n_chars")
-      )
+      val pages = pages60(s, dir, col("doc_id"))
+      // content family first, unlike symKeys: the pairs below are
+      // distinct(), so the family order cannot change the result
       val keys = pages
-        .select(
-          col("doc_id").as("url"),
-          concat_ws("|", lit("t"), array_join(slice(split(col("text"), " "), 1, 2), " ")).as("key")
-        )
-        .unionAll(
-          pages.select(
-            col("doc_id").as("url"),
-            concat_ws("|", lit("b"), col("lang"), floor(col("n_chars") / 5).cast("long")).as("key")
-          )
-        )
+        .select(col("doc_id").as("url"), tokenKey)
+        .unionAll(pages.select(col("doc_id").as("url"), bandKey))
       val a = keys.select(col("url").as("urlA"), col("key"))
       val b = keys.select(col("url").as("urlB"), col("key"))
       val pairs = a.join(b, Seq("key")).where(col("urlA") < col("urlB")).select("urlA", "urlB").distinct()

@@ -343,14 +343,8 @@ object Main {
         )
         require(!opts.contains("snapshots"), "--remove and --snapshots are mutually exclusive")
         val baseDir = opts("base")
-        val basePred = spark.read.parquet(baseDir)
-        val idxDir = opts.getOrElse("index", s"$baseDir.index")
-        val (index, storedStrategies) = IncrementalLinkage.loadIndex(spark, idxDir)
-        require(
-          storedStrategies == strategyNames,
-          s"index at $idxDir was built with --strategies $storedStrategies (got $strategyNames); " +
-            "blocking keys would not align — rerun with the matching strategies"
-        )
+        val (basePred, index) =
+          IncrementalLinkage.openBase(spark, baseDir, opts.getOrElse("index", s"$baseDir.index"), strategyNames)
         // destructive path: the tombstone input must name its url column
         // explicitly — a positional columns.head fallback would silently
         // delete by whatever happens to lead an unexpected file
@@ -387,14 +381,8 @@ object Main {
         // for downstream stores that relabel in place.
         require(!opts.contains("snapshots"), "--base (incremental) and --snapshots are mutually exclusive")
         val baseDir = opts("base")
-        val basePred = spark.read.parquet(baseDir)
         val idxDir = opts.getOrElse("index", s"$baseDir.index")
-        val (index, storedStrategies) = IncrementalLinkage.loadIndex(spark, idxDir)
-        require(
-          storedStrategies == strategyNames,
-          s"index at $idxDir was built with --strategies $storedStrategies (got $strategyNames); " +
-            "blocking keys would not align — rerun with the matching strategies"
-        )
+        val (basePred, index) = IncrementalLinkage.openBase(spark, baseDir, idxDir, strategyNames)
         // --emit changed: write the UPSERT view only (delta rows + affected
         // old rows, text/seq null for old rows) — the store is patched in
         // place, never rewritten; at corpus scale this is the only mode

@@ -155,16 +155,6 @@ final case class SuffixBlocking(minSuffixLen: Int = 4, maxSuffixes: Int = 16)
   }
 }
 
-/** Per-block stats recorded in the run manifest (dropped-work accounting —
-  * the reference logs truncation implicitly via candidate caps, W3).
-  */
-final case class BlockingStats(
-    totalKeys: Long,
-    totalBlocks: Long,
-    oversizedBlocks: Long,
-    oversizedKeyRows: Long
-)
-
 object Blocker {
 
   /** Union of all strategies' keys, deduped. Output: (url, key), both
@@ -184,8 +174,8 @@ object Blocker {
   /** Split blocks larger than `maxBlockSize` into deterministic sub-buckets
     * (salting): key -> key#b where b = xxhash64(url) mod nBuckets. Bounds
     * the quadratic pair blow-up on head-domain / boilerplate blocks; the
-    * recall loss is confined to oversized blocks and is reported via
-    * `stats`. Skew that survives (many medium blocks on one shuffle key
+    * recall loss is confined to oversized blocks, which [[skewCensus]]
+    * lists. Skew that survives (many medium blocks on one shuffle key
     * range) is left to AQE's skew-join split.
     */
   def saltOversized(keys: DataFrame, maxBlockSize: Int): DataFrame = {
@@ -213,25 +203,6 @@ object Blocker {
       .drop("block_n")
   }
 
-  def stats(keys: DataFrame, maxBlockSize: Int): BlockingStats = {
-    val agg = keys
-      .groupBy("key")
-      .agg(count("*").as("n"))
-      .agg(
-        sum("n").as("totalKeys"),
-        count("*").as("totalBlocks"),
-        sum(when(col("n") > maxBlockSize, 1L).otherwise(0L)).as("oversized"),
-        sum(when(col("n") > maxBlockSize, col("n")).otherwise(0L)).as("oversizedRows")
-      )
-      .collect()(0)
-    BlockingStats(
-      Option(agg.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L),
-      agg.getAs[Long]("totalBlocks"),
-      Option(agg.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L),
-      Option(agg.get(3)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    )
-  }
-
   /** Candidate pairs: equi-self-join on blocking key with canonical
     * orientation (urlA < urlB kills mirror duplicates pre-shuffle of the
     * scoring join), deduped across keys (a pair found under several
@@ -253,8 +224,8 @@ object Blocker {
   /** Skew census: the topN heaviest blocks with the EXACT cost a run
     * would pay for each — the pre-flight read an operator does before a
     * scoring run on a new corpus (is one boilerplate key about to emit
-    * 10^10 pairs?). [[stats]] answers "how much overall"; this answers
-    * WHICH keys, and what [[saltOversized]] will do about them:
+    * 10^10 pairs?): WHICH keys, and what [[saltOversized]] will do about
+    * them:
     * `n_buckets` = the salt sub-bucket count (1 = unsalted),
     * `raw_pairs` = n(n−1)/2, `capped_pairs` = the post-salt pair bound
     * Σ_b n_b(n_b−1)/2 at perfectly even sub-buckets (n mod b buckets of

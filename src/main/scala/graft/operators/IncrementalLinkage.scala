@@ -155,7 +155,29 @@ object IncrementalLinkage {
     (Index(loadKeysChain(spark, dir, depth = 0), spark.read.parquet(s"$dir/idf"), docs), strategies)
   }
 
-  private def readMeta(spark: org.apache.spark.sql.SparkSession, dir: String): (String, Option[String]) = {
+  /** Open a committed base run: its predictions at `predDir` plus the key
+    * index at `indexDir`, refusing an index built under other blocking
+    * strategies than `strategies` (its keys would not align with the
+    * delta's).
+    */
+  private[graft] def openBase(
+      spark: org.apache.spark.sql.SparkSession,
+      predDir: String,
+      indexDir: String,
+      strategies: String
+  ): (DataFrame, Index) = {
+    val base = spark.read.parquet(predDir)
+    val (index, stored) = loadIndex(spark, indexDir)
+    require(
+      stored == strategies,
+      s"index at $indexDir was built with strategies [$stored] (got [$strategies]); " +
+        "blocking keys would not align — rerun with the matching strategies"
+    )
+    (base, index)
+  }
+
+  /** meta.json's raw text and its parent index dir, if it has one. */
+  private[graft] def readMeta(spark: org.apache.spark.sql.SparkSession, dir: String): (String, Option[String]) = {
     val mp = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(mp), s"no index at $dir (run the base with --save-index true)")

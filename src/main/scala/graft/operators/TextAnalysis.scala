@@ -72,12 +72,7 @@ object TextAnalysis {
     * filters ("for all your X needs for all your X needs ..."). Row-local
     * single-pass kernels (SimKernels.ngramRepetition), shuffle-free: at
     * 100 TB this is a projection on the scan, never an explode + groupBy
-    * over per-gram rows.
-    */
-  def repetitionSignals(text: Column): Column =
-    repetitionSignalsTokens(Normalize.tokensOf(text))
-
-  /** [[repetitionSignals]] over a caller-supplied token array — battery
+    * over per-gram rows. Takes a caller-supplied token array: battery
     * queries pass raw `split(text, " ")` so engine and oracle share ONE
     * tokenization (tokensOf lowercases and collapses whitespace, which a
     * plain SQL string_split does not).

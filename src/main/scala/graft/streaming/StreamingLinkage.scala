@@ -89,24 +89,6 @@ object StreamingLinkage {
     spark.read.parquet(s"$storeDir/predictions_v$v")
   }
 
-  /** Store version `v`'s predictions and index, refusing an index built
-    * under other blocking strategies than the batch's.
-    */
-  private def openVersion(
-      spark: SparkSession,
-      storeDir: String,
-      v: Int,
-      strategyNames: String
-  ): (DataFrame, IncrementalLinkage.Index) = {
-    val base = spark.read.parquet(s"$storeDir/predictions_v$v")
-    val (index, stored) = IncrementalLinkage.loadIndex(spark, s"$storeDir/index_v$v")
-    require(
-      stored == strategyNames,
-      s"store at $storeDir was built with strategies [$stored], batch uses [$strategyNames]"
-    )
-    (base, index)
-  }
-
   /** Link one batch of pages (url, text) into the store: bootstrap a base
     * run at v0 if the store is empty, else an O(delta) increment to
     * v<N+1>. Exposed for tests and for callers that already sit inside a
@@ -134,7 +116,8 @@ object StreamingLinkage {
         )
         commitVersion(spark, storeDir, 0)
       case Some(v) =>
-        val (base, index) = openVersion(spark, storeDir, v, strategyNames)
+        val (base, index) =
+          IncrementalLinkage.openBase(spark, s"$storeDir/predictions_v$v", s"$storeDir/index_v$v", strategyNames)
         val r = IncrementalLinkage.link(pages, base, index, cfg, reseq = false)
         r.predictions.write.mode("overwrite").parquet(s"$storeDir/predictions_v${v + 1}")
         if ((v + 1) % compactEvery == 0)
@@ -179,7 +162,8 @@ object StreamingLinkage {
     currentVersion(spark, storeDir) match {
       case None => ()
       case Some(v) =>
-        val (base, index) = openVersion(spark, storeDir, v, strategyNames)
+        val (base, index) =
+          IncrementalLinkage.openBase(spark, s"$storeDir/predictions_v$v", s"$storeDir/index_v$v", strategyNames)
         val r = IncrementalLinkage.remove(tombstones, base, index, cfg, reseq = false)
         r.predictions.write.mode("overwrite").parquet(s"$storeDir/predictions_v${v + 1}")
         IncrementalLinkage.saveIndex(r.index, s"$storeDir/index_v${v + 1}", strategyNames)
@@ -255,15 +239,13 @@ object StreamingLinkage {
         val f = fs(spark, storeDir)
         // walk the index parent chain from v down to its flat root
         def parentVersion(ver: Int): Option[Int] = {
-          val mp = new org.apache.hadoop.fs.Path(s"$storeDir/index_v$ver/meta.json")
-          if (!f.exists(mp)) None
-          else {
-            val in = f.open(mp)
-            val txt =
-              try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-              finally in.close()
-            "\"parent\":\"[^\"]*index_v(\\d+)\"".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-          }
+          val dir = s"$storeDir/index_v$ver"
+          if (!f.exists(new org.apache.hadoop.fs.Path(s"$dir/meta.json"))) None
+          else
+            IncrementalLinkage
+              .readMeta(spark, dir)
+              ._2
+              .flatMap("index_v(\\d+)$".r.findFirstMatchIn(_).map(_.group(1).toInt))
         }
         var root = v
         var p = parentVersion(root)

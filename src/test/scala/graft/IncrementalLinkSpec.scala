@@ -200,4 +200,24 @@ class IncrementalLinkSpec extends SparkSpec {
       if (name == "seeded WebCorpus") assert(own.exists(_._5.exists(_.nonEmpty)), "no tfidf weights to compare")
     }
   }
+
+  test("battery q_inc_link == the accept-and-cluster leg rerun over all documents (sf0.001)") {
+    // the battery's incremental theorem, checked in-process: q_inc_link
+    // links the doc_id % 4 == 0 delta onto a base run over the rest; the
+    // rerun closes the whole corpus in one leg at the same cap
+    val sf = "/root/testdata/sf0.001"
+    val pages = SparkEntry.pages60(spark, sf)
+    val texts = pages.select("url", "text")
+    val (acc, clusters) = SparkEntry.acceptAndCluster(SparkEntry.symKeys(pages), texts, 100000)
+    val fresh = LinkagePipeline.freshRows(texts, clusters, LinkagePipeline.bestScores(acc))
+    val rerun = graft.util.DeterministicSeq.assign(fresh.select("url", "cluster_id", "status"), "url")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "cluster_id", "status", "seq").orderBy("url").collect().toSeq
+    val inc = rows(SparkEntry.queries("q_inc_link")(spark, sf))
+    assert(inc.size == 500)
+    assert(inc == rows(rerun))
+    // not vacuous: some cluster holds both a delta and a base document
+    val straddling = inc.groupBy(_.get(1)).values.exists(_.map(_.getLong(0) % 4 == 0).toSet.size == 2)
+    assert(straddling, "no cluster straddles the base/delta split")
+  }
 }
